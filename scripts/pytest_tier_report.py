@@ -7,7 +7,11 @@ Usage: python scripts/pytest_tier_report.py pytest_r16_durations.log [budget_sec
 
 ``--manifest`` regenerates tests/slow_manifest.txt: every node id
 whose measured call time is >= thr_sec (default 1.75) enters the slow
-tier (see tests/conftest.py::pytest_collection_modifyitems).
+tier (see tests/conftest.py::pytest_collection_modifyitems).  The log
+must come from a full-suite run (``-m "slow or not slow"``): a log
+whose pytest summary reports ``deselected`` tests is refused with a
+non-zero exit, because the tests it never ran would silently drop out
+of the manifest and back into the budgeted default tier.
 
 Prints per-file total seconds (sorted desc), the cumulative share,
 and the suggested `slow` file set: the smallest set of files whose
@@ -21,6 +25,21 @@ from __future__ import annotations
 import re
 import sys
 from collections import defaultdict
+
+
+#: the closing pytest summary line, e.g. "12 passed, 3 deselected in 4.56s"
+_SUMMARY = re.compile(r"\b\d+ (passed|failed|errors?|skipped)\b.* in [0-9.]+s")
+
+
+def _deselected(path: str) -> int:
+    """Tests the run behind a durations log deselected, read from its
+    pytest summary line(s)."""
+    n = 0
+    for line in open(path):
+        if _SUMMARY.search(line):
+            m = re.search(r"\b(\d+) deselected\b", line)
+            n += int(m.group(1)) if m else 0
+    return n
 
 
 def _write_manifest(path: str, thr: float) -> None:
@@ -51,6 +70,13 @@ def main() -> None:
     if "--manifest" in sys.argv:
         i = sys.argv.index("--manifest")
         thr = float(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 1.75
+        skipped = _deselected(path)
+        if skipped:
+            sys.exit(
+                f"refusing to regenerate the manifest from {path}: its run "
+                f"deselected {skipped} tests; capture the durations log with "
+                "-m 'slow or not slow'"
+            )
         _write_manifest(path, thr)
         return
     budget = float(sys.argv[2]) if len(sys.argv) > 2 else 600.0

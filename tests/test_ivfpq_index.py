@@ -6,6 +6,7 @@ the recall floor.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
@@ -549,48 +550,54 @@ def test_stream_pq_index_ingest_two_wave_replay(spark, tmp_path_factory):
     )
 
 
+@pytest.mark.parametrize("codec", ["pq", "raw"])
 def test_stream_pq_ingest_recovers_interrupted_build(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, codec
 ):
-    """r15 (ADVICE): build_ivfpq_index writes codebooks LAST, so a
-    crash mid-build can leave centroids present without codebooks.
-    The ingest must probe the last-written artifact: a replay over a
-    torn build has to route through the overwrite-mode REBUILD (and
-    converge), not the merge path (which would die reading codebooks
-    forever)."""
-    import os
+    """r15 (ADVICE): each build writes its frozen parameters LAST
+    (raw: cells then centroids; PQ: codes, vectors, centroids, then
+    codebooks), so a crash mid-build can leave the index without its
+    last artifact.  The ingest must probe the last-written artifact: a
+    replay over a torn build has to route through the overwrite-mode
+    REBUILD (and converge), not the merge path (which would die
+    reading the missing parameters forever)."""
     import shutil
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+        stream_ann_index_ingest,
         stream_pq_index_ingest,
     )
 
     emb = _emb(spark, n=64)
-    base = str(tmp_path_factory.mktemp("pqtorn"))
+    base = str(tmp_path_factory.mktemp(f"torn_{codec}"))
     src = _wave_source(spark, emb, base, splits=((0, 32), (32, 64)))
     idx = os.path.join(base, "index")
+    first = emb.where(F.col("vec_id") < 32)
     # simulate the torn first-batch build: everything written except
-    # the final codebooks artifact
-    lvec.build_ivfpq_index(
-        emb.where(F.col("vec_id") < 32), idx, n_cells=4, m=4, k_codes=8
-    )
-    shutil.rmtree(f"{idx}/codebooks")
+    # the final artifact
+    if codec == "pq":
+        lvec.build_ivfpq_index(first, idx, n_cells=4, m=4, k_codes=8)
+        shutil.rmtree(f"{idx}/codebooks")
+    else:
+        lvec.build_ivf_index(first, idx, n_cells=4)
+        shutil.rmtree(f"{idx}/centroids")
     stream = (
         spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, m=4, k_codes=8
-    )
-    assert spark.read.parquet(f"{idx}/codes").count() == 64
-    assert spark.read.parquet(f"{idx}/vectors").count() == 64
-    assert (
-        lvec.search_ivfpq_index(
-            spark, idx, _queries(emb), k=3, n_probe=4
-        ).count()
-        > 0
-    )
+    ckpt = os.path.join(base, "ckpt")
+    q = _queries(emb)
+    if codec == "pq":
+        stream_pq_index_ingest(stream, idx, ckpt, n_cells=4, m=4, k_codes=8)
+        assert spark.read.parquet(f"{idx}/codes").count() == 64
+        assert spark.read.parquet(f"{idx}/vectors").count() == 64
+        out = lvec.search_ivfpq_index(spark, idx, q, k=3, n_probe=4)
+    else:
+        stream_ann_index_ingest(stream, idx, ckpt, n_cells=4)
+        assert spark.read.parquet(f"{idx}/cells").count() == 64
+        out = lvec.search_ivf_index(spark, idx, q, k=3, n_probe=4)
+    assert out.count() > 0
 
 
 def test_full_erasure_rerunnable_through_crash_window(

@@ -399,16 +399,18 @@ def test_merge_sinks_distinguish_missing_from_unreadable():
     )
 
 
-def test_stream_vectors_to_ivf_index_incremental(spark, tmp_path, smoke_dir):
-    """Streaming index maintenance: micro-batched vectors land in the
-    persisted IVF index across runs; searches after each wave see
-    everything ingested so far."""
+def test_stream_ann_index_ingest_merges_into_prebuilt_index(
+    spark, tmp_path, smoke_dir
+):
+    """Streaming index maintenance on an index built beforehand: every
+    micro-batch merges into the persisted IVF index across runs, and
+    each wave's vectors join everything stored so far."""
     from pyspark.sql import functions as F
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
-        stream_vectors_to_ivf_index,
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+        stream_ann_index_ingest,
     )
 
     emb = load_table(spark, smoke_dir, "embeddings").select(
@@ -424,7 +426,7 @@ def test_stream_vectors_to_ivf_index_incremental(spark, tmp_path, smoke_dir):
         stream = spark.readStream.schema(
             "vec_id long, embedding array<double>"
         ).parquet(src)
-        stream_vectors_to_ivf_index(stream, index, ckpt)
+        stream_ann_index_ingest(stream, index, ckpt, n_cells=4)
 
     wave1 = emb.filter(F.col("vec_id") % 3 == 1).limit(4)
     wave1.write.mode("append").parquet(src)

@@ -18,8 +18,8 @@ explicit lifecycle, never an implicitly-leaked cache.
 
 Scoping (r10): the registry is keyed, never one flat list.  By
 default every entry is keyed by the CALLING THREAD, so two queries
-running concurrently in one session — e.g. the documented
-``stream_vectors_to_ivf_index`` maintenance loop (whose foreachBatch
+running concurrently in one session — e.g. the
+``stream_ann_index_ingest`` maintenance drain (whose foreachBatch
 stages and releases on the stream-execution thread) alongside a batch
 LSH query on the main thread — can no longer unpersist each other's
 staging mid-flight.  Correctness never depended on it (persist is an

@@ -6,21 +6,42 @@ computed with codegen'd higher-order functions (``zip_with`` +
 ``list_cosine_similarity`` agrees to 6 decimals so everything here is
 oracle-checkable.
 
-Two retrieval strategies:
+Ad-hoc operators derive their structure per call:
+:func:`top_k_bruteforce` (exact: broadcast queries × corpus, linear in
+the corpus), :func:`top_k_ann_signlsh` (random-hyperplane buckets),
+:func:`top_k_ann_ivf` (coarse cells with an ``n_probe`` dial) and
+:func:`top_k_ann_ivfpq` (IVF plus product-quantized residuals, ADC
+scoring, exact re-rank).
 
-- :func:`top_k_bruteforce` — the exact baseline: broadcast the (small)
-  query set against the corpus, score, window-rank per query.  Cost is
-  ``|Q| × N`` — linear in the corpus, NOT an N×N all-pairs join; at
-  1000 executors the corpus stays partition-parallel and each
-  partition scores only the broadcast queries.
-- :func:`top_k_ann_signlsh` — the scale path: random-hyperplane
-  (sign) LSH buckets both sides; each query only scores its bucket.
-  Planes are fixed literals (deterministic, engine-portable); recall
-  is tunable via ``n_planes``.
+Persisted indexes share ONE lifecycle — build, delta merge, erasure,
+compaction, pruned search, filtered search along the
+:func:`probe_ladder`, and the streaming drain in
+``streaming.ingest`` — written once over a private cell codec, the one
+decision the two index kinds differ in: how a cell stores its
+vectors.  Both partition the cell relation by ``cell_id`` (a probe is
+directory pruning) and freeze their parameters at build time (merges
+assign and encode against them).  Layout under the index path::
+
+                      raw codec                  PQ codec
+                      (build_ivf_index)          (build_ivfpq_index)
+    cells, by cell_id cells (id, *meta,          codes (id, *meta,
+                             __v, __n)                  __n, __codes)
+    by-id re-rank     —                          vectors (id, __v, __n)
+    frozen params     centroids (cell_id, __c)   centroids (cell_id, __c)
+                                                 codebooks (subspace,
+                                                            code, __c)
+    scoring           exact cosine               ADC, exact re-rank of
+                                                 the top rerank·k
+    merge contract    upsert by id across        new ids or identical
+                      cells; emptied cells       replays; by-id append
+                      deleted                    to vectors
+    last build write  centroids                  codebooks
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import math
 from typing import Sequence
 
@@ -208,6 +229,22 @@ def _seed_centroid_rows(
     return [
         (i, [float(x) for x in r["__v"]]) for i, r in enumerate(seeds)
     ]
+
+
+def _corpus(
+    df: DataFrame, id_col: str, vec_col: str, meta: Sequence[str] = ()
+) -> DataFrame:
+    """``(id, *meta, __v, __n)`` over the finite vectors — the corpus
+    projection every IVF-family operator and index writer starts from
+    (``__n``, the precomputed row norm, keeps each centroid score to
+    one dot pass)."""
+    vcast = F.col(vec_col).cast("array<double>")
+    return df.filter(finite_vec(vec_col)).select(
+        F.col(id_col),
+        *[F.col(c) for c in meta],
+        vcast.alias("__v"),
+        norm(vcast).alias("__n"),
+    )
 
 
 def _probe_frame(
@@ -1127,12 +1164,7 @@ def top_k_ann_ivf(
     measured 1.9× slower at sf0.1."""
     from .staging import stage
 
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
+    corpus = stage(_corpus(embeddings, id_col, vec_col))
     if centroids is not None:
         cent_rows = _collect_centroids(centroids)
     else:
@@ -1177,35 +1209,13 @@ def top_k_ann_ivf_multidial(
     Returns ``[(p, top_k_frame), ...]`` in the given dial order."""
     from .staging import stage
 
-    p_max = max(probes)
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
+    corpus = stage(_corpus(embeddings, id_col, vec_col))
     cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    # _probe_frame's sorted-slice, with the probe RANK kept: posexplode
-    # of the same descending struct sort's top-p_max prefix
-    qcast = F.col(query_vec_col).cast("array<double>")
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), qcast.alias("__q"), norm(qcast).alias("__qn")
+    # the probe frame at the widest dial, with each cell's probe rank
+    probes_ranked = _probe_frame(
+        queries, cent_rows, max(probes), query_id_col, query_vec_col, "__pr"
     )
-    probe_cells = F.transform(
-        F.slice(
-            F.sort_array(_cell_scores("__q", "__qn", cent_rows), asc=False),
-            1,
-            p_max,
-        ),
-        lambda c: (-c["nc"]).cast("int"),
-    )
-    probes_ranked = q.select(
-        query_id_col,
-        "__q",
-        "__qn",
-        F.posexplode(probe_cells).alias("__pos", "cell_id"),
-    ).withColumn("__pr", F.col("__pos") + 1).drop("__pos")
     # score once at the widest dial; project to the rank inputs before
     # staging so the cache holds no vector arrays (guide §2.3), and
     # fill it eagerly — every dial's rank leg references it
@@ -1620,555 +1630,6 @@ def _pq_codes_expr(
     return F.expr("array(" + ", ".join(parts) + ")")
 
 
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    meta_cols: Sequence[str] = (),
-) -> list:
-    """Materialize a PERSISTED IVF index: the corpus assigned to its
-    coarse cells and written as parquet PARTITIONED BY ``cell_id``
-    (one directory per inverted list), plus the centroid table.
-
-    This is the build-once/search-many shape a deployment actually
-    runs — :func:`top_k_ann_ivf` re-derives the assignment per query
-    set, which is right for ad-hoc checks and wrong for a serving
-    index.  Partitioning by cell is the load-bearing choice: probing
-    becomes DIRECTORY-level partition pruning, so a search touches
-    ``n_probe/n_cells`` of the stored bytes no matter how large the
-    corpus grows (verified by plan test: `PartitionFilters` on
-    ``cell_id``, not a post-scan filter).
-
-    Layout: ``{path}/cells`` — ``(id, *meta_cols, __v, __n)``
-    partitioned by ``cell_id``; ``{path}/centroids`` —
-    ``(cell_id, __c)``.  ``meta_cols`` (r12) carries filterable
-    metadata (language, label, license…) INTO the cell files so a
-    filtered search (:func:`search_ivf_index_filtered`) pushes its
-    predicate down to the pruned scan — at scale the filter must ride
-    the index, not a join back to the corpus.
-    """
-    spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta_cols],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/cells"
-    )
-    spark.createDataFrame(
-        cent_rows, "cell_id int, __c array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # the frozen quantizer just written — a build-then-merge
-    # maintenance loop threads it into add_to_ivf_index (r16 opt)
-    return cent_rows
-
-
-def add_to_ivf_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_rows: list | None = None,
-    stored_meta: list[str] | None = None,
-) -> None:
-    """Incremental index maintenance: assign a DELTA batch of vectors
-    to the index's FROZEN centroids and merge them into the persisted
-    cells — the N+δ ingestion shape (`dedup_against_corpus`'s
-    analogue for retrieval).  Only the cell partitions the delta
-    touches are rewritten (dynamic partition overwrite of
-    existing-cell rows ∪ delta rows for those cells); untouched cell
-    directories are never read or written.  Centroids stay fixed —
-    the standard serving trade (drift is handled by periodic rebuild,
-    not per-batch retraining, which would invalidate every stored
-    assignment).
-
-    ``cent_rows`` / ``stored_meta`` (r16 opt, the r15 KS-monitor
-    lesson): the frozen centroids and the stored schema are
-    batch-independent, so a per-run maintenance loop (the streaming
-    ingest drain) collects them once and threads them through every
-    merge — the per-batch centroid read+collect job and schema
-    listing disappear; frozen centroids mean the inlined assignment
-    literals are identical either way.  Default ``None`` keeps the
-    self-contained read-from-``path`` behavior."""
-    spark = delta.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        delete_partition_dirs,
-        overwrite_partitions_dynamic,
-    )
-
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    vcast = F.col(vec_col).cast("array<double>")
-    # The stored schema is the contract: an index built with meta_cols
-    # carries them in every cell file, so the delta must supply the
-    # same columns or the merged partitions would silently lose them.
-    if stored_meta is None:
-        stored_cols = spark.read.parquet(f"{path}/cells").columns
-        stored_meta = [
-            c
-            for c in stored_cols
-            if c not in (id_col, "__v", "__n", "cell_id")
-        ]
-    meta = list(stored_meta)
-    missing = [c for c in meta if c not in delta.columns]
-    if missing:
-        raise ValueError(
-            f"delta is missing index metadata columns {missing}; the "
-            f"stored index at {path!r} carries {meta} in its cell files"
-        )
-    corpus = delta.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    # Persist the assignment ONCE: the all-centroids dot-product
-    # projection is the expensive step, and without the cache it runs
-    # twice — for the touched-cells collect AND again when the merged
-    # union writes.  Self-contained persist/unpersist (not
-    # localCheckpoint, which cannot be released and would leak a
-    # persistent RDD per streaming micro-batch).
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col).persist()
-    try:
-        new_cells = {
-            r["cell_id"]
-            for r in assigned.select("cell_id").distinct().collect()
-        }
-        # Cells holding PRIOR copies of delta ids: an UPDATED vector
-        # may re-assign to a different cell, and the stale copy must
-        # leave its OLD cell too or a search would surface both.
-        # Narrow column-pruned scan of (id, cell_id) semi-joined to
-        # the bounded delta ids; a production deployment would keep
-        # an id→cell sidecar to turn this into a point lookup.
-        prior_cells = {
-            r["cell_id"]
-            for r in spark.read.parquet(f"{path}/cells")
-            .select(id_col, "cell_id")
-            .join(
-                F.broadcast(assigned.select(id_col).distinct()),
-                on=id_col,
-                how="left_semi",
-            )
-            .select("cell_id")
-            .distinct()
-            .collect()
-        }
-        touched = sorted(new_cells | prior_cells)
-        existing = spark.read.parquet(f"{path}/cells").filter(
-            F.col("cell_id").isin(touched)
-        )
-        # UPSERT by id (r12): existing rows whose id the delta carries
-        # are replaced, so re-adding an id updates its vector — the
-        # contract an index wants — and re-applying the SAME delta
-        # (a streaming foreachBatch replay after failure) is
-        # idempotent.  The anti-join probes only the touched cells'
-        # rows against the (bounded-batch) delta ids.
-        keep = [id_col, *meta, "__v", "__n", "cell_id"]
-        merged = (
-            existing.join(assigned.select(id_col), on=id_col, how="left_anti")
-            .select(*keep)
-            .unionByName(assigned.select(*keep))
-        ).persist()
-        # persist, not localCheckpoint, DESPITE the delete-then-
-        # overwrite below (r14 / ADVICE): this function runs inside
-        # streaming foreachBatch, where a localCheckpoint per
-        # micro-batch leaks an unreleasable RDD.  The trade: if cached
-        # blocks are lost mid-write (executor failure) the recompute
-        # re-lists already-deleted partition files and the BATCH fails
-        # with FileNotFoundException — which is safe, because the merge
-        # is replay-idempotent: the streaming retry (or a batch-caller
-        # rerun) re-applies the same delta onto whatever state the
-        # failed attempt left and converges.  Batch-only maintenance
-        # (delete_from_ivf_index) uses the localCheckpoint pattern
-        # instead.
-        try:
-            # A prior cell can end up with ZERO surviving rows (its only
-            # members were updated ids that re-assigned elsewhere).
-            # Dynamic overwrite writes nothing for such a cell, so its
-            # stale directory would survive and a search would surface
-            # BOTH copies of the moved id — delete emptied cell
-            # partitions explicitly before the overwrite (same contract
-            # as writers.upsert_by_key).
-            present = {
-                r["cell_id"]
-                for r in merged.select("cell_id").distinct().collect()
-            }
-            delete_partition_dirs(
-                spark,
-                f"{path}/cells",
-                ["cell_id"],
-                [(c,) for c in set(touched) - present],
-            )
-            overwrite_partitions_dynamic(merged, f"{path}/cells", ["cell_id"])
-        finally:
-            merged.unpersist(blocking=True)
-    finally:
-        # blocking: async removal would leave the block registered into
-        # the caller's next operation (and trip persistent-RDD audits)
-        assigned.unpersist(blocking=True)
-
-
-def delete_from_ivf_index(
-    delta_ids: DataFrame, path: str, id_col: str = "vec_id"
-) -> None:
-    """Erasure from a persisted ANN index (r13): remove every stored
-    row whose id appears in ``delta_ids`` — the right-to-be-forgotten
-    shape at the INDEX layer.  Deleting a user from the corpus table
-    is not enough once their vectors are serving traffic; the index
-    must forget them too, without a rebuild.
-
-    Only cells holding a target id are rewritten (narrow id+cell
-    column-pruned scan semi-joined to the bounded id batch — the same
-    probe :func:`add_to_ivf_index` uses for upsert); cells emptied by
-    the delete are removed outright rather than left as stale
-    directories.  Covers both layouts in one call: the raw index's
-    ``cells``, the PQ index's ``codes``, and the PQ by-id ``vectors``
-    re-rank relation (unpartitioned — anti-join rewrite through a
-    lineage cut).  Idempotent: re-deleting absent ids touches
-    nothing."""
-    spark = delta_ids.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        delete_partition_dirs,
-        hadoop_path_exists,
-        overwrite_partitions_dynamic,
-    )
-
-    ids = delta_ids.select(id_col).distinct().persist()
-    try:
-        for rel in ("cells", "codes"):
-            p = f"{path}/{rel}"
-            if not hadoop_path_exists(spark, p):
-                continue
-            try:
-                stored = spark.read.parquet(p)
-            except AnalysisException:
-                # Schema-less root (e.g. a _SUCCESS-only directory
-                # left by an interrupted erasure on a pre-tombstone
-                # layout): nothing is stored, so there is nothing to
-                # forget — treat as already-empty instead of failing
-                # the re-run (r15 / ADVICE).
-                continue
-            prior_cells = {
-                r["cell_id"]
-                for r in stored.select(id_col, "cell_id")
-                .join(F.broadcast(ids), on=id_col, how="left_semi")
-                .select("cell_id")
-                .distinct()
-                .collect()
-            }
-            if not prior_cells:
-                continue
-            existing = stored.filter(
-                F.col("cell_id").isin(sorted(prior_cells))
-            )
-            # Batch-maintenance lineage cut (r14 / ADVICE — the
-            # delete_where/upsert_by_key pattern): a .persist() here
-            # would, on cache loss, RECOMPUTE the survivors from a file
-            # listing the delete_partition_dirs below has already
-            # mutated and die with FileNotFoundException mid-erasure;
-            # localCheckpoint materializes once and never re-lists.
-            survivors = existing.join(
-                F.broadcast(ids), on=id_col, how="left_anti"
-            ).localCheckpoint(eager=True)
-            present = {
-                r["cell_id"]
-                for r in survivors.select("cell_id").distinct().collect()
-            }
-            full_erase = False
-            if not present:
-                # every touched cell is about to empty; probe (BEFORE
-                # any file is deleted) whether the touched set covered
-                # the whole relation — if so the root would hold only
-                # _SUCCESS and the next read would fail to infer schema
-                full_erase = prior_cells >= {
-                    r["cell_id"]
-                    for r in stored.select("cell_id").distinct().collect()
-                }
-            doomed = prior_cells - present
-            if full_erase:
-                # FULL erasure (r14 / ADVICE): leave a schema'd
-                # tombstone — one EMPTY parquet file inside a single
-                # cell directory, so partition discovery still sees a
-                # well-formed layout, reads/searches return zero rows,
-                # and a later upsert's dynamic overwrite of cell_id=0
-                # replaces it transparently (the unpartitioned
-                # `vectors` leg already gets this for free from its
-                # empty-but-schema'd rewrite).  Written BEFORE any
-                # directory delete (r15 / ADVICE): the old order could
-                # crash after delete_partition_dirs with the tombstone
-                # unwritten, leaving a _SUCCESS-only root whose next
-                # read fails schema inference — making the erasure
-                # non-re-runnable through exactly the window the
-                # tombstone was added to close.  The overwrite of
-                # cell_id=0 empties that cell itself, so it leaves the
-                # doomed list.
-                survivors.drop("cell_id").repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(f"{p}/cell_id=0")
-                doomed = doomed - {0}
-            delete_partition_dirs(
-                spark,
-                p,
-                ["cell_id"],
-                [(c,) for c in doomed],
-            )
-            if present:
-                overwrite_partitions_dynamic(survivors, p, ["cell_id"])
-        vp = f"{path}/vectors"
-        if hadoop_path_exists(spark, vp):
-            # unpartitioned by-id relation: anti-join rewrite; the
-            # eager lineage cut is what lets the overwrite target the
-            # path being read (upsert_by_key's trade)
-            kept = (
-                spark.read.parquet(vp)
-                .join(F.broadcast(ids), on=id_col, how="left_anti")
-                .localCheckpoint(eager=True)
-            )
-            kept.write.mode("overwrite").parquet(vp)
-    finally:
-        ids.unpersist(blocking=True)
-
-
-def compact_ivf_index(
-    spark, path: str, files_per_cell: int = 1
-) -> None:
-    """Small-file compaction for a persisted ANN index (r13): every
-    delta merge (:func:`add_to_ivf_index` / :func:`add_to_ivfpq_index`)
-    rewrites its touched cells with the write's task parallelism, so a
-    long-running ingest accretes files per cell directory — and a
-    probe pays per file (task launch + footer read), eroding the very
-    directory-pruning advantage the index exists for.  Rewrites each
-    cell to ``files_per_cell`` files through the same dynamic-overwrite
-    compaction as any partitioned table
-    (``sources.writers.compact_partitions``); search results are
-    IDENTICAL before and after (hash-pinned via the shared IVF twin).
-    Covers both layouts: the raw index's ``cells`` and the PQ index's
-    ``codes`` (the unpartitioned ``vectors`` re-rank relation is
-    append-mostly and left to ordinary table compaction)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        compact_partitions,
-        hadoop_path_exists,
-    )
-
-    for rel in ("cells", "codes"):
-        if hadoop_path_exists(spark, f"{path}/{rel}"):
-            compact_partitions(
-                spark, f"{path}/{rel}", ["cell_id"], files_per_cell
-            )
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-) -> DataFrame:
-    """Top-k search over a :func:`build_ivf_index` index WITHOUT
-    touching the raw corpus: per-query probe cells are chosen
-    map-side against the (bounded, collected) centroid table, the
-    distinct probed cells become a LITERAL ``isin`` filter on the
-    partition column — static partition pruning, only those cell
-    directories are read — and scoring/ranking proceeds exactly as
-    :func:`top_k_ann_ivf`.  With the same centroids and dials the
-    results are identical to the non-persisted operator (and to its
-    SQL oracle twin).
-
-    ``cent_rows`` (r16 opt, guide §2.4): a caller that just built or
-    merged the index can pass the frozen centroid rows it already
-    holds, skipping this search's centroid read+collect job — doubles
-    round-trip parquet exactly, so passing them is byte-identical to
-    re-reading."""
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    probes = _probe_frame(
-        queries, cent_rows, n_probe, query_id_col, query_vec_col
-    )
-    # Bounded collect (≤ |Q|·n_probe ints, ≤ n_cells distinct): the
-    # literal cell list is what turns the probe into directory pruning.
-    cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect()
-    )
-    stored = spark.read.parquet(f"{path}/cells").filter(
-        F.col("cell_id").isin(cells)
-    )
-    scored = stored.join(F.broadcast(probes), on="cell_id").withColumn(
-        "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-    )
-    # prune_salt=1: per-query candidates are already cell-bounded
-    # (n_probe · max-cell rows), so the salted local top-k would only
-    # add a shuffle — the prune pays on UNBOUNDED scorers (bruteforce,
-    # LSH buckets), not here (measured +0.8 s at sf0.1 for no benefit)
-    return _rank_top_k(scored, k, query_id_col, id_col, prune_salt=1)
-
-
-def probe_ladder(n_probe: int, n_cells: int) -> list[int]:
-    """The deterministic probe-widening ladder for filtered search:
-    ``n_probe, 2·n_probe, 4·n_probe, …`` capped at ``n_cells`` (the
-    final rung always probes everything, so k is guaranteed whenever
-    the filtered corpus holds k rows).  Part of the result contract —
-    the SQL twin derives each query's effective probe count from the
-    same rungs."""
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    ladder: list[int] = []
-    p = n_probe
-    while p < n_cells:
-        ladder.append(p)
-        p *= 2
-    ladder.append(n_cells)
-    return ladder
-
-
-def search_ivf_index_filtered(
-    spark,
-    path: str,
-    queries: DataFrame,
-    where: str,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-) -> DataFrame:
-    """FILTERED top-k over a persisted IVF index — the
-    metadata-predicate × ANN composition every vector store serves
-    ("nearest docs WHERE lang='en'"), on the pruned index instead of
-    the full corpus (``vec_filtered_topk`` is the exact-bruteforce
-    form; at 100 TB the filter must ride the index).
-
-    Semantics (PRE-filter, k-guaranteed): per query, the effective
-    probe count is the FIRST rung of :func:`probe_ladder` whose top-p
-    cells contain ≥ k corpus vectors satisfying ``where`` (else the
-    final probe-everything rung), and the result is the exact cosine
-    top-k over the filtered vectors in those cells.  This is the
-    recall contract vector stores document for filtered search: a
-    selective predicate can starve the probed cells, so the search
-    widens deterministically rather than returning < k rows.
-
-    Scale shape: BOTH predicates reach the scan — ``cell_id isin``
-    as PartitionFilters (directory pruning) and ``where`` as a pushed
-    data filter (pinned in tests/test_plans.py) — so rung t reads
-    ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes and only
-    STARVED queries escalate (the per-rung candidate count is a
-    bounded ≤|Q|-row collect off the staged rung relation; |Q| is the
-    probe-batch dial, the codebook class of driver-side state).  The
-    widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
-    """
-    from .staging import stage
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    ladder = probe_ladder(n_probe, len(cent_rows))
-    # ONE ranked probe frame at the WIDEST rung (r16 opt, guide §1.2
-    # — the multidial prefix-derivation lesson): rung p's probe rows
-    # are exactly ``__pr <= p`` of the descending cell ordering, so
-    # the per-rung probe construction and the per-rung probed-cells
-    # collect both collapse into one bounded job here
-    # (|Q|·n_cells rows — dials, not data).  Queries with non-finite
-    # vectors have no probe rows and can never produce output in
-    # either shape, so they drop from ``pending`` up front.
-    probes_all = _probe_frame(
-        queries,
-        cent_rows,
-        ladder[-1],
-        query_id_col,
-        query_vec_col,
-        rank_col="__pr",
-    )
-    probe_rows = probes_all.select(
-        query_id_col, "cell_id", "__pr"
-    ).collect()
-    pending = {r[query_id_col] for r in probe_rows}
-    parts: list[DataFrame] = []
-    for p in ladder:
-        if not pending:
-            break
-        probes = probes_all.filter(
-            F.col(query_id_col).isin(*pending) & (F.col("__pr") <= p)
-        ).drop("__pr")
-        cells = sorted(
-            {
-                r["cell_id"]
-                for r in probe_rows
-                if r[query_id_col] in pending and r["__pr"] <= p
-            }
-        )
-        stored = (
-            spark.read.parquet(f"{path}/cells")
-            .filter(F.col("cell_id").isin(cells))
-            .filter(F.expr(where))
-        )
-        scored = stage(
-            stored.join(F.broadcast(probes), on="cell_id").withColumn(
-                "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-            )
-        )
-        counts = {
-            r[query_id_col]: r["__nc"]
-            for r in scored.groupBy(query_id_col)
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .collect()
-        }
-        done = (
-            set(pending)
-            if p == ladder[-1]
-            else {q for q in pending if counts.get(q, 0) >= k}
-        )
-        if done:
-            parts.append(
-                _rank_top_k(
-                    scored.filter(F.col(query_id_col).isin(*done)),
-                    k,
-                    query_id_col,
-                    id_col,
-                    prune_salt=1,
-                )
-            )
-        pending -= done
-    if not parts:
-        # no queries survived the id collect (empty/NULL-id batch):
-        # return an empty frame with the ranked-output contract types
-        probes = _probe_frame(
-            queries, cent_rows, ladder[0], query_id_col, query_vec_col
-        )
-        empty = (
-            spark.read.parquet(f"{path}/cells")
-            .filter(F.lit(False))
-            .join(F.broadcast(probes), on="cell_id")
-            .withColumn("__cos", dot("__v", "__q"))
-        )
-        return _rank_top_k(empty, k, query_id_col, id_col, prune_salt=1)
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
-
-
 def top_k_ann_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -2221,29 +1682,101 @@ def top_k_ann_ivfpq(
     Rows-only for the driver (KMeans codebooks are engine-specific);
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
+    corpus, cand = _ivfpq_candidates(
+        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
+        query_id_col, query_vec_col, centroids, codebooks, seed,
+    )
+    return _adc_rank_joined(cand, corpus, k, rerank, id_col, query_id_col)
+
+
+def top_k_ann_ivfpq_multirerank(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    reranks: Sequence[int],
+    n_cells: int = 8,
+    n_probe: int = 2,
+    m: int = 4,
+    k_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    centroids: DataFrame | None = None,
+    codebooks: DataFrame | None = None,
+    seed: int = 42,
+) -> list[tuple[int, DataFrame]]:
+    """:func:`top_k_ann_ivfpq` swept over several ``rerank`` dials
+    from ONE encode + ADC + exact-re-rank pass (r15 opt, the
+    PQ-recall-profile shape; the ``rerank`` analogue of
+    :func:`top_k_ann_ivf_multidial`): the ADC candidate rank ``__crk``
+    is computed once, the exact re-rank join runs once at the WIDEST
+    cut, and dial ``r`` keeps the candidates with ``__crk ≤ r·k`` — a
+    PREFIX of the widest cut under the identical (approx DESC, id)
+    window order, so every dial's rows equal the independent
+    :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
+    final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
     from .staging import stage
 
-    vcast = F.col(vec_col).cast("array<double>")
-    # Staged: the corpus projection has two consumers (PQ encode, exact
-    # re-rank by id); the registry releases it after materialization.
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
+    corpus, cand = _ivfpq_candidates(
+        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
+        query_id_col, query_vec_col, centroids, codebooks, seed,
+    )
+    rer = stage(
+        _adc_rescored(
+            cand, corpus, max(reranks) * k, id_col, query_id_col, "__crk"
         )
     )
+    rer.count()
+    return [
+        (
+            r,
+            _rank_top_k(
+                rer.filter(F.col("__crk") <= r * k),
+                k,
+                query_id_col,
+                id_col,
+            ),
+        )
+        for r in reranks
+    ]
+
+
+def _ivfpq_candidates(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    n_cells: int,
+    n_probe: int,
+    m: int,
+    k_codes: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    centroids: DataFrame | None,
+    codebooks: DataFrame | None,
+    seed: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The in-memory IVF-PQ pipeline up to the ADC join, shared by
+    :func:`top_k_ann_ivfpq` and its multi-rerank sweep: returns the
+    staged corpus (the exact re-rank fetch side) and the encoded
+    corpus joined to the broadcast ADC probe frame."""
+    from .staging import stage
+
+    # Staged: the corpus projection has two consumers (PQ encode, exact
+    # re-rank by id); the registry releases it after materialization.
+    corpus = stage(_corpus(embeddings, id_col, vec_col))
     if centroids is not None:
         cent_rows = _collect_centroids(centroids)
     else:
         cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    # Residual frame: v − centroid(cell) (:func:`_residual_frame` —
-    # one literal array-of-arrays lookup, no join).  STAGED: its
-    # consumers are the codebook trainer's sample collect plus the
-    # encode projection — unstaged, the K-centroid assign expression
-    # re-evaluates per consumer.  All literal trees here are single
-    # F.expr SQL strings (Column-by-Column construction paid ~10k
-    # Py4J round-trips and dominated the query's wall clock at any
-    # scale).
+    # Residual frame, STAGED: its consumers are the codebook trainer's
+    # sample collect plus the encode projection — unstaged, the
+    # K-centroid assign expression re-evaluates per consumer.  All
+    # literal trees here are single F.expr SQL strings (Column-by-Column
+    # construction paid ~10k Py4J round-trips and dominated the query's
+    # wall clock at any scale).
     resid = stage(_residual_frame(assigned, cent_rows, id_col))
     if codebooks is None:
         codebooks = train_pq_codebooks(
@@ -2264,11 +1797,10 @@ def top_k_ann_ivfpq(
         "__n",
         _pq_codes_expr("__r", by_sub).alias("__codes"),
     )
-
     probes = _adc_probes(
         queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
     )
-    return _adc_rank(encoded, corpus, probes, k, rerank, id_col, query_id_col)
+    return corpus, encoded.join(F.broadcast(probes), on="cell_id")
 
 
 def _adc_probes(
@@ -2325,42 +1857,20 @@ def _adc_probes(
     )
 
 
-def _adc_rank(
-    encoded: DataFrame,
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    rerank: int,
-    id_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """The ADC scoring + exact-re-rank epilogue shared by
-    :func:`top_k_ann_ivfpq` and :func:`search_ivfpq_index`:
-    approximate score = one table lookup per subspace against the
-    broadcast probe frame, top ``rerank·k`` candidates per query
-    fetch their raw vectors BY ID (at scale: a sparse point-lookup
-    join, not a corpus scan) for exact-cosine ordering."""
-    return _adc_rank_joined(
-        encoded.join(F.broadcast(probes), on="cell_id"),
-        corpus,
-        k,
-        rerank,
-        id_col,
-        query_id_col,
-    )
-
-
-def _adc_rank_joined(
+def _adc_rescored(
     cand: DataFrame,
     corpus: DataFrame,
-    k: int,
-    rerank: int,
+    cut: int,
     id_col: str,
     query_id_col: str,
+    *extra: str,
 ) -> DataFrame:
-    """ADC epilogue over an ALREADY code×probe-joined frame — split
-    out of :func:`_adc_rank` so the filtered searcher (r14) can stage
-    the join once for both the starvation count and the ranking."""
+    """The ADC candidate epilogue over a code×probe-joined frame:
+    approximate score = one table lookup per subspace, the top ``cut``
+    candidates per query fetch their raw vectors BY ID (at scale: a
+    sparse point-lookup join, not a corpus scan) and get their exact
+    cosine ``__cos``.  ``extra`` keeps candidate columns (the
+    multi-rerank sweep keeps the candidate rank ``__crk``)."""
     # Bracket indexing (GetArrayItem) is 0-based, matching the 0-based
     # lambda index j and code values directly.
     approx = F.expr(
@@ -2373,106 +1883,31 @@ def _adc_rank_joined(
     candidates = (
         cand.withColumn("__approx", approx)
         .withColumn("__crk", F.row_number().over(cand_w))
-        .filter(F.col("__crk") <= rerank * k)
-        .select(query_id_col, id_col, "__q", "__qn")
+        .filter(F.col("__crk") <= cut)
+        .select(query_id_col, id_col, "__q", "__qn", *extra)
     )
-    rer = candidates.join(corpus, on=id_col).withColumn(
+    return candidates.join(corpus, on=id_col).withColumn(
         "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
     )
-    return _rank_top_k(rer, k, query_id_col, id_col)
 
 
-def top_k_ann_ivfpq_multirerank(
-    embeddings: DataFrame,
-    queries: DataFrame,
+def _adc_rank_joined(
+    cand: DataFrame,
+    corpus: DataFrame,
     k: int,
-    reranks: Sequence[int],
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    centroids: DataFrame | None = None,
-    codebooks: DataFrame | None = None,
-    seed: int = 42,
-) -> list[tuple[int, DataFrame]]:
-    """:func:`top_k_ann_ivfpq` swept over several ``rerank`` dials
-    from ONE encode + ADC + exact-re-rank pass (r15 opt, the
-    PQ-recall-profile shape; the ``rerank`` analogue of
-    :func:`top_k_ann_ivf_multidial`): the ADC candidate rank ``__crk``
-    is computed once, the exact re-rank join runs once at the WIDEST
-    cut, and dial ``r`` keeps the candidates with ``__crk ≤ r·k`` — a
-    PREFIX of the widest cut under the identical (approx DESC, id)
-    window order, so every dial's rows equal the independent
-    :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
-    final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
-    from .staging import stage
-
-    r_max = max(reranks)
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    resid = stage(_residual_frame(assigned, cent_rows, id_col))
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            resid, m=m, k=k_codes, vec_col="__r", seed=seed
-        )
-    corpus.count()
-    resid.count()
-    by_sub = _collect_codebooks(codebooks)
-    encoded = resid.select(
+    rerank: int,
+    id_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """ADC scoring + exact re-rank of the top ``rerank·k`` candidates
+    per query over a code×probe-joined frame — the ranker of every
+    IVF-PQ searcher (in-memory, persisted, filtered)."""
+    return _rank_top_k(
+        _adc_rescored(cand, corpus, rerank * k, id_col, query_id_col),
+        k,
+        query_id_col,
         id_col,
-        "cell_id",
-        "__n",
-        _pq_codes_expr("__r", by_sub).alias("__codes"),
     )
-    probes = _adc_probes(
-        queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
-    )
-    # _adc_rank_joined's epilogue at the widest cut, keeping __crk
-    cand = encoded.join(F.broadcast(probes), on="cell_id")
-    approx = F.expr(
-        "__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
-        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    ) / (F.col("__n") * F.col("__qn"))
-    cand_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__approx"), F.asc(id_col)
-    )
-    candidates = (
-        cand.withColumn("__approx", approx)
-        .withColumn("__crk", F.row_number().over(cand_w))
-        .filter(F.col("__crk") <= r_max * k)
-        .select(query_id_col, id_col, "__q", "__qn", "__crk")
-    )
-    rer = stage(
-        candidates.join(corpus, on=id_col).withColumn(
-            "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-        )
-    )
-    rer.count()
-    return [
-        (
-            r,
-            _rank_top_k(
-                rer.filter(F.col("__crk") <= r * k),
-                k,
-                query_id_col,
-                id_col,
-            ),
-        )
-        for r in reranks
-    ]
 
 
 def _residual_frame(
@@ -2483,9 +1918,9 @@ def _residual_frame(
 ) -> DataFrame:
     """``v − centroid(cell)`` via one literal matrix lookup (no join)
     — the PQ encode input, shared by the in-memory operator, the
-    index builder, and the standalone trainer.  ``extra_cols`` (r14)
-    rides filterable metadata through to the code files for the
-    filtered searcher."""
+    index codec, and the standalone trainer.  ``extra_cols`` rides
+    metadata (and, for a merge, the raw vector) through to the
+    encoded frame."""
     cents_mat = _sql_matrix([c for _cid, c in cent_rows])
     return assigned.withColumn(
         "__r",
@@ -2515,12 +1950,7 @@ def train_ivfpq_params(
     from .staging import stage
 
     spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
+    corpus = stage(_corpus(embeddings, id_col, vec_col))
     cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     resid = _residual_frame(
         _assign_cells_literal(corpus, cent_rows, id_col), cent_rows, id_col
@@ -2534,241 +1964,224 @@ def train_ivfpq_params(
     return centroids, codebooks
 
 
-def build_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    m: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    codebooks: DataFrame | None = None,
-    seed: int = 42,
-    meta_cols: Sequence[str] = (),
-) -> tuple[list, dict]:
-    """Materialize a PERSISTED IVF-PQ index (r12, the r11 verdict's
-    #3): what a 100-TB serving deployment actually stores.  The raw
-    :func:`build_ivf_index` keeps full float vectors in every cell —
-    at 64 dims that is 512 B/vector scanned per probe; this index
-    stores ``m·log2(k_codes)``-bit PQ codes of the cell residual
-    (16 bits/vector at the defaults) plus the exact norm, so a probe
-    reads ~30× fewer corpus bytes, and keeps the raw vectors in a
-    SEPARATE relation fetched BY ID only for the ≤ ``rerank·k``
-    exact-re-rank candidates.
+# --- the persisted-index lifecycle -------------------------------------
+#
+# Build, merge, frozen-parameter loading, pruned search and the
+# filtered probe ladder are written once below, over a cell codec
+# (``_RawCells`` / ``_PqCodes``) — the one thing the raw IVF index and
+# the IVF-PQ index differ in: how a cell stores its vectors.  A codec
+# names its cell relation (``rel``), that relation's columns besides
+# id, metadata and cell_id (``stored``), and its frozen parameter
+# relations in build write order (``params`` — the last one is the
+# build's last-written artifact).  It supplies:
+#
+#   fit(assigned, cent_rows, id_col, **dials)  -> (assigned, frozen, extra
+#                                                  param frames); may stage
+#   encode(assigned, frozen, id_col, meta)     -> (id, *meta, __v, *stored, cell_id)
+#   write_side(path, encoded, id_col)          the build's side relation
+#   merge(spark, path, encoded, id_col, keep)  the merge contract
+#   probes(queries, frozen, n_probe, ...)      per-query probe rows
+#   score(joined), ranker(...)                 stored×probe scoring, top-k
 
-    Layout::
 
-        {path}/codes      (id, *meta_cols, __n, __codes)  by cell_id
-        {path}/vectors    (id, __v, __n)      exact-re-rank fetch side
-        {path}/centroids  (cell_id, __c)      coarse quantizer
-        {path}/codebooks  (subspace, code, __c)  PQ codebooks
+def _cells_of(df: DataFrame) -> set:
+    """The distinct ``cell_id`` values of a frame, collected (bounded
+    by the cell count)."""
+    return {r["cell_id"] for r in df.select("cell_id").distinct().collect()}
 
-    Same deterministic seed quantizer as the raw index; codebooks are
-    the seeded driver-Lloyd fit of :func:`train_pq_codebooks` on the
-    residual frame — engine-specific (rows-only for the driver), with
-    recall floors and the bytes ratio pinned in unit tests.
-    ``meta_cols`` (r14) carries filterable metadata INTO the code
-    files — same contract as the raw index — so the filtered searcher
-    (:func:`search_ivfpq_index_filtered`) pushes its predicate down
-    to the pruned CODE scan; the re-rank ``vectors`` relation stays
-    narrow (the filter decision is made before any raw vector is
-    fetched).
 
-    Returns ``(cent_rows, by_sub)`` — the frozen parameters just
-    written — so a maintenance loop that builds then merges in ONE
-    run can thread them into :func:`add_to_ivfpq_index` instead of
-    re-reading + re-collecting them per delta batch (r16 opt).
-    """
-    from .staging import stage
-
-    spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
-    # staged: consumers are the seed collect, the vectors write, and
-    # the residual/encode projection
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col),
-            *[F.col(c) for c in meta_cols],
-            vcast.alias("__v"),
-            norm(vcast).alias("__n"),
-        )
+def _merged_cells(
+    stored: DataFrame,
+    touched: set,
+    ids: DataFrame,
+    encoded: DataFrame,
+    id_col: str,
+    keep: list[str],
+) -> DataFrame:
+    """The rows a merge writes back into the touched cells: their
+    stored rows minus the delta's ids (``ids``, shaped by the codec
+    for its join), plus the delta.  Anti-joining on the delta ids
+    makes a replayed batch rewrite the touched cells byte-identically
+    instead of duplicating rows."""
+    return (
+        stored.filter(F.col("cell_id").isin(sorted(touched)))
+        .join(ids, on=id_col, how="left_anti")
+        .select(*keep)
+        .unionByName(encoded.select(*keep))
     )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    resid = stage(
-        _residual_frame(
-            _assign_cells_literal(corpus, cent_rows, id_col),
-            cent_rows,
+
+
+class _RawCells:
+    """Raw codec: a cell stores each full vector and its norm; a
+    search scores exact cosine over the probed cells."""
+
+    rel = "cells"
+    stored = ("__v", "__n")
+    params = ("centroids",)
+
+    def fit(self, assigned, cent_rows, id_col):
+        return assigned, (cent_rows,), []
+
+    def encode(self, assigned, frozen, id_col, meta):
+        return assigned
+
+    def write_side(self, path, encoded, id_col):
+        pass
+
+    def merge(self, spark, path, encoded, id_col, keep):
+        """UPSERT by id: an updated vector may re-assign to another
+        cell, so the cells holding PRIOR copies of the delta ids are
+        rewritten too (a narrow id+cell scan semi-joined to the bounded
+        delta ids; a production deployment would keep an id→cell
+        sidecar), and a prior cell left with no rows is deleted —
+        dynamic overwrite writes nothing for it, so its stale copy
+        would survive.  Re-applying the same delta is idempotent."""
+        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+            delete_partition_dirs,
+            overwrite_partitions_dynamic,
+        )
+
+        cells = f"{path}/cells"
+        touched = _cells_of(encoded) | _cells_of(
+            spark.read.parquet(cells)
+            .select(id_col, "cell_id")
+            .join(
+                F.broadcast(encoded.select(id_col).distinct()),
+                on=id_col,
+                how="left_semi",
+            )
+        )
+        # persist, not localCheckpoint, DESPITE the delete-then-
+        # overwrite below (r14 / ADVICE): this runs inside streaming
+        # foreachBatch, where a localCheckpoint per micro-batch leaks an
+        # unreleasable RDD.  If cached blocks are lost mid-write the
+        # recompute re-lists deleted files and the BATCH fails with
+        # FileNotFoundException — safe, because the merge is
+        # replay-idempotent and the retry converges.  Batch-only
+        # maintenance (delete_from_ivf_index) uses localCheckpoint.
+        merged = _merged_cells(
+            spark.read.parquet(cells),
+            touched,
+            encoded.select(id_col),
+            encoded,
             id_col,
-            extra_cols=meta_cols,
+            keep,
+        ).persist()
+        try:
+            delete_partition_dirs(
+                spark,
+                cells,
+                ["cell_id"],
+                [(c,) for c in touched - _cells_of(merged)],
+            )
+            overwrite_partitions_dynamic(merged, cells, ["cell_id"])
+        finally:
+            merged.unpersist(blocking=True)
+
+    def probes(
+        self, queries, frozen, n_probe, query_id_col, query_vec_col, rank_col=None
+    ):
+        return _probe_frame(
+            queries, frozen[0], n_probe, query_id_col, query_vec_col, rank_col
         )
-    )
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            resid, m=m, k=k_codes, vec_col="__r", seed=seed
+
+    def score(self, joined):
+        return joined.withColumn(
+            "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
         )
-    by_sub = _collect_codebooks(codebooks)
-    resid.select(
-        id_col,
-        *meta_cols,
-        "__n",
-        _pq_codes_expr("__r", by_sub).alias("__codes"),
-        "cell_id",
-    ).write.mode("overwrite").partitionBy("cell_id").parquet(f"{path}/codes")
-    corpus.drop(*meta_cols).write.mode("overwrite").parquet(
-        f"{path}/vectors"
-    )
-    spark.createDataFrame(
-        cent_rows, "cell_id int, __c array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    codebooks.write.mode("overwrite").parquet(f"{path}/codebooks")
-    return cent_rows, by_sub
+
+    def ranker(self, spark, path, k, rerank, id_col, query_id_col):
+        # prune_salt=1: per-query candidates are already cell-bounded
+        # (n_probe · max-cell rows), so the salted local top-k would only
+        # add a shuffle — the prune pays on UNBOUNDED scorers (bruteforce,
+        # LSH buckets), not here (measured +0.8 s at sf0.1 for no benefit)
+        return lambda scored: _rank_top_k(
+            scored, k, query_id_col, id_col, prune_salt=1
+        )
 
 
-def add_to_ivfpq_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_rows: list | None = None,
-    by_sub: dict | None = None,
-    stored_meta: list[str] | None = None,
-) -> None:
-    """Incremental IVF-PQ index maintenance (the serving lifecycle's
-    N+δ shape, mirroring :func:`add_to_ivf_index`): the delta batch is
-    assigned to the index's FROZEN centroids, residual-encoded with
-    its FROZEN codebooks, and merged into the persisted code cells —
-    only the touched cell partitions are rewritten (dynamic partition
-    overwrite); the delta's raw vectors append to the by-id re-rank
-    relation.  Centroids and codebooks stay fixed — the standard
-    serving trade (per-batch retraining would invalidate every stored
-    code; quantizer drift is handled by periodic rebuild), so the
-    merged index is bit-identical to a fresh build over corpus ∪ delta
-    with the same frozen parameters (pinned in
-    tests/test_ivfpq_index.py).
+class _PqCodes:
+    """PQ codec: a cell stores each vector's norm and the PQ codes of
+    its residual to the cell centroid; a search ranks by ADC and
+    re-ranks the top ``rerank·k`` exactly from the by-id ``vectors``
+    relation."""
 
-    Delta ids are assumed NEW, but REPLAY of a delta is safe (r13):
-    the codes merge anti-joins existing rows on the delta ids (the
-    raw path's contract) and the ``vectors`` append anti-joins the
-    stored id set, so a foreachBatch crash-replay of the same batch
-    rewrites the codes byte-identically and appends nothing — each
-    leg is independently idempotent, so even a crash BETWEEN the two
-    writes replays clean.  True UPDATES are REJECTED (r14): a changed
-    vector for an existing id would replace its code while the
-    idempotent vectors append kept the stale re-rank vector — a
-    silently inconsistent index — so overlapping ids are checked
-    against their stored vectors (cheap on the bounded batch) and a
-    mismatch raises; route real updates through
-    :func:`delete_from_ivf_index` + re-add, or a rebuild.
+    rel = "codes"
+    stored = ("__n", "__codes")
+    params = ("centroids", "codebooks")
 
-    ``cent_rows`` / ``by_sub`` / ``stored_meta`` (r16 opt, guide
-    §2.4 / the r15 KS-monitor lesson): the index's FROZEN parameters
-    are batch-independent by contract, so a per-run caller — the
-    streaming ingest's foreachBatch drain — collects them ONCE and
-    threads them through every merge instead of re-reading +
-    re-collecting centroids/codebooks/schema per micro-batch (three
-    driver jobs + three parquet listings per batch deleted; frozen
-    parameters mean the inlined literals are identical either way,
-    so the merged index is byte-identical — pinned in
-    tests/test_ivfpq_index.py).  Default ``None`` keeps the
-    self-contained read-from-``path`` behavior for one-shot callers
-    and crash-replay restarts (whose fresh closure has no state)."""
-    spark = delta.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        overwrite_partitions_dynamic,
-    )
+    def fit(
+        self, assigned, cent_rows, id_col, m=4, k_codes=16, seed=42, codebooks=None
+    ):
+        from .staging import stage
 
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
+        # staged: the codebook trainer's sample collect, the codes write
+        # and the vectors write all read the assignment
+        assigned = stage(assigned)
+        if codebooks is None:
+            codebooks = train_pq_codebooks(
+                _residual_frame(assigned, cent_rows, id_col),
+                m=m,
+                k=k_codes,
+                vec_col="__r",
+                seed=seed,
+            )
+        return (
+            assigned,
+            (cent_rows, _collect_codebooks(codebooks)),
+            [("codebooks", codebooks)],
         )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    vcast = F.col(vec_col).cast("array<double>")
-    # The stored CODE schema is the contract (same rule as the raw
-    # index): an index built with meta_cols carries them in every code
-    # file, so the delta must supply the same columns or the merged
-    # partitions would silently lose them.
-    if stored_meta is None:
-        stored_cols = spark.read.parquet(f"{path}/codes").columns
-        stored_meta = [
-            c
-            for c in stored_cols
-            if c not in (id_col, "__n", "__codes", "cell_id")
-        ]
-    meta = list(stored_meta)
-    missing = [c for c in meta if c not in delta.columns]
-    if missing:
-        raise ValueError(
-            f"delta is missing index metadata columns {missing}; the "
-            f"stored index at {path!r} carries {meta} in its code files"
-        )
-    corpus = delta.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
-    # Persist ONCE (self-contained persist/unpersist like
-    # add_to_ivf_index): the assign+encode projection feeds the
-    # touched-cells collect, the merge write, AND the vectors append.
-    encoded = (
-        _assign_cells_literal(corpus, cent_rows, id_col)
-        .withColumn(
-            "__r",
-            F.expr(
-                f"zip_with(__v, element_at({cents_mat}, cell_id + 1), "
-                "(x, y) -> x - y)"
-            ),
-        )
-        .select(
-            F.col(id_col),
+
+    def encode(self, assigned, frozen, id_col, meta):
+        cent_rows, by_sub = frozen
+        return _residual_frame(
+            assigned, cent_rows, id_col, extra_cols=[*meta, "__v"]
+        ).select(
+            id_col,
             *meta,
             "__v",
             "__n",
             _pq_codes_expr("__r", by_sub).alias("__codes"),
             "cell_id",
         )
-        .persist()
-    )
-    try:
-        touched = [
-            r["cell_id"]
-            for r in encoded.select("cell_id").distinct().collect()
-        ]
-        # TRUE-update guard (r14 / ADVICE): an overlapping id whose
-        # delta vector differs from its STORED vector would half-apply
-        # (new code, stale re-rank vector).  Cost contract (r15 /
-        # ADVICE): the probe below is an id-COLUMN-only scan of the
-        # by-id relation per batch — O(index) rows but the narrowest
-        # possible parquet read, the same scan shape the idempotent
-        # vectors append already pays for its anti-join.  The full
-        # __v comparison (wide array column) runs ONLY when the probe
-        # finds overlapping ids, i.e. on replays and true updates —
-        # the common all-new-ids batch never reads a stored vector.
-        # NOTE a codes-side touched-cells probe would NOT be a sound
-        # short-circuit: a changed vector can assign to a DIFFERENT
-        # coarse cell, so its stored code sits outside the touched
-        # set while the half-apply hazard is live; the by-id relation
-        # is the one place every stored id appears exactly once.
+
+    def write_side(self, path, encoded, id_col):
+        encoded.select(id_col, "__v", "__n").write.mode("overwrite").parquet(
+            f"{path}/vectors"
+        )
+
+    def merge(self, spark, path, encoded, id_col, keep):
+        """New ids or byte-identical replays only: the codes merge
+        anti-joins the delta ids (frozen parameters ⇒ a replayed id
+        re-encodes into the SAME cell) and the ``vectors`` append
+        anti-joins the stored id set, so each leg is independently
+        idempotent and a crash between them replays clean.  A CHANGED
+        vector for a stored id raises (r14): it would replace the code
+        while the append kept the stale re-rank vector."""
+        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+            overwrite_partitions_dynamic,
+        )
+
+        codes, vectors = f"{path}/codes", f"{path}/vectors"
+        ids = F.broadcast(encoded.select(id_col).distinct())
+        touched = _cells_of(encoded)
+        # TRUE-update guard.  Cost contract (r15 / ADVICE): the probe is
+        # an id-COLUMN-only scan of the by-id relation — the scan shape
+        # the idempotent append already pays — and the wide __v
+        # comparison runs ONLY when it finds overlapping ids (replays
+        # and true updates).  A codes-side touched-cells probe would
+        # NOT be sound: a changed vector can assign to a DIFFERENT
+        # cell; the by-id relation holds every stored id exactly once.
         overlap = (
-            spark.read.parquet(f"{path}/vectors")
+            spark.read.parquet(vectors)
             .select(id_col)
-            .join(
-                F.broadcast(encoded.select(id_col).distinct()),
-                on=id_col,
-                how="left_semi",
-            )
+            .join(ids, on=id_col, how="left_semi")
             .head(1)
         )
         conflicts = (
             [
                 r[id_col]
-                for r in spark.read.parquet(f"{path}/vectors")
+                for r in spark.read.parquet(vectors)
                 .select(id_col, F.col("__v").alias("__stored"))
                 .join(
                     F.broadcast(encoded.select(id_col, "__v")),
@@ -2790,35 +2203,424 @@ def add_to_ivfpq_index(
                 "updates through delete_from_ivf_index + re-add, or a "
                 "rebuild"
             )
-        existing = spark.read.parquet(f"{path}/codes").filter(
-            F.col("cell_id").isin(touched)
+        overwrite_partitions_dynamic(
+            _merged_cells(
+                spark.read.parquet(codes), touched, ids, encoded, id_col, keep
+            ),
+            codes,
+            ["cell_id"],
         )
-        keep = [id_col, *meta, "__n", "__codes", "cell_id"]
-        # Anti-join on the delta ids (frozen parameters ⇒ a replayed id
-        # re-encodes into the SAME cell, so the touched-cell scan sees
-        # it): replaying a batch rewrites the touched partitions
-        # byte-identically instead of duplicating codes.
-        merged = (
-            existing.join(
-                F.broadcast(encoded.select(id_col).distinct()),
-                on=id_col,
-                how="left_anti",
-            )
-            .select(*keep)
-            .unionByName(encoded.select(*keep))
-        )
-        overwrite_partitions_dynamic(merged, f"{path}/codes", ["cell_id"])
-        # Idempotent append: anti-join against the relation's OWN id
-        # set (column-pruned scan; append-while-read is legal — only
-        # overwrite conflicts), so a replayed batch appends zero rows
-        # no matter where the prior attempt crashed.
+        # append-while-read is legal (only overwrite conflicts)
         encoded.select(id_col, "__v", "__n").join(
-            spark.read.parquet(f"{path}/vectors").select(id_col),
+            spark.read.parquet(vectors).select(id_col),
             on=id_col,
             how="left_anti",
-        ).write.mode("append").parquet(f"{path}/vectors")
+        ).write.mode("append").parquet(vectors)
+
+    def probes(
+        self, queries, frozen, n_probe, query_id_col, query_vec_col, rank_col=None
+    ):
+        return _adc_probes(
+            queries, *frozen, n_probe, query_id_col, query_vec_col, rank_col
+        )
+
+    def score(self, joined):
+        return joined
+
+    def ranker(self, spark, path, k, rerank, id_col, query_id_col):
+        vectors = spark.read.parquet(f"{path}/vectors")
+        return lambda cand: _adc_rank_joined(
+            cand, vectors, k, rerank, id_col, query_id_col
+        )
+
+
+_RAW = _RawCells()
+_PQ = _PqCodes()
+
+_COLLECT_PARAM = {
+    "centroids": _collect_centroids,
+    "codebooks": _collect_codebooks,
+}
+
+
+def _frozen_params(spark, path: str, codec, given: Sequence = ()) -> tuple:
+    """The index's frozen parameters, one per ``codec.params`` entry.
+    A value the caller already holds (a build's return, a drain's
+    per-run cache) is used as is — doubles round-trip parquet exactly,
+    so that is byte-identical to re-reading; the rest are read from
+    ``path`` and collected (bounded: centroids and codebooks)."""
+    return tuple(
+        g if g is not None else _COLLECT_PARAM[p](spark.read.parquet(f"{path}/{p}"))
+        for p, g in itertools.zip_longest(codec.params, given)
+    )
+
+
+def _stored_meta(spark, path: str, codec, id_col: str) -> list[str]:
+    """The metadata columns an index carries in its cell files — the
+    schema contract every merge must supply."""
+    return [
+        c
+        for c in spark.read.parquet(f"{path}/{codec.rel}").columns
+        if c not in (id_col, *codec.stored, "cell_id")
+    ]
+
+
+def _build_index(
+    codec,
+    embeddings: DataFrame,
+    path: str,
+    n_cells: int,
+    id_col: str,
+    vec_col: str,
+    centroids: DataFrame | None,
+    meta_cols: Sequence[str],
+    **fit,
+) -> tuple:
+    """Assign the corpus to its cells (seeded or given centroids), let
+    the codec fit its parameters and encode, and write the cell
+    relation, the codec's side relation, then the frozen parameters in
+    ``codec.params`` order.  Returns the frozen parameters."""
+    spark = embeddings.sparkSession
+    corpus = _corpus(embeddings, id_col, vec_col, meta_cols)
+    if centroids is not None:
+        cent_rows = _collect_centroids(centroids)
+    else:
+        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    assigned, frozen, frames = codec.fit(
+        _assign_cells_literal(corpus, cent_rows, id_col), cent_rows, id_col, **fit
+    )
+    encoded = codec.encode(assigned, frozen, id_col, meta_cols)
+    encoded.select(id_col, *meta_cols, *codec.stored, "cell_id").write.mode(
+        "overwrite"
+    ).partitionBy("cell_id").parquet(f"{path}/{codec.rel}")
+    codec.write_side(path, encoded, id_col)
+    centroid_frame = spark.createDataFrame(
+        cent_rows, "cell_id int, __c array<double>"
+    )
+    for name, frame in [("centroids", centroid_frame), *frames]:
+        frame.write.mode("overwrite").parquet(f"{path}/{name}")
+    return frozen
+
+
+def _merge_index(
+    codec,
+    delta: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    frozen: Sequence = (),
+    stored_meta: list[str] | None = None,
+) -> None:
+    """Assign a delta batch to the index's FROZEN centroids, encode it
+    with its frozen parameters, and merge it into the touched cells
+    (the codec decides the merge contract).  Parameters stay fixed —
+    the standard serving trade: per-batch retraining would invalidate
+    every stored assignment; drift is handled by periodic rebuild."""
+    spark = delta.sparkSession
+    frozen = _frozen_params(spark, path, codec, frozen)
+    # The stored schema is the contract: an index built with meta_cols
+    # carries them in every cell file, so the delta must supply the
+    # same columns or the merged partitions would silently lose them.
+    meta = list(
+        stored_meta
+        if stored_meta is not None
+        else _stored_meta(spark, path, codec, id_col)
+    )
+    missing = [c for c in meta if c not in delta.columns]
+    if missing:
+        raise ValueError(
+            f"delta is missing index metadata columns {missing}; the "
+            f"stored index at {path!r} carries {meta} in its "
+            f"{codec.rel} files"
+        )
+    # Persist the encoded delta ONCE: the all-centroids assignment is
+    # the expensive step and it feeds the touched-cells collect, the
+    # merge write and the codec's side legs.  Self-contained
+    # persist/unpersist, not localCheckpoint, which cannot be released
+    # and would leak a persistent RDD per streaming micro-batch.
+    encoded = codec.encode(
+        _assign_cells_literal(
+            _corpus(delta, id_col, vec_col, meta), frozen[0], id_col
+        ),
+        frozen,
+        id_col,
+        meta,
+    ).persist()
+    try:
+        codec.merge(
+            spark, path, encoded, id_col, [id_col, *meta, *codec.stored, "cell_id"]
+        )
     finally:
+        # blocking: async removal would leave the block registered into
+        # the caller's next operation (and trip persistent-RDD audits)
         encoded.unpersist(blocking=True)
+
+
+def _search_index(
+    codec,
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    rerank: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    frozen: Sequence,
+) -> DataFrame:
+    """Pruned top-k search: per-query probe cells are chosen map-side
+    against the frozen centroids, and the distinct probed cells become
+    a LITERAL ``isin`` on the partition column — static partition
+    pruning, only those cell directories are read."""
+    frozen = _frozen_params(spark, path, codec, frozen)
+    probes = codec.probes(queries, frozen, n_probe, query_id_col, query_vec_col)
+    # bounded collect: ≤ |Q|·n_probe ints, ≤ n_cells distinct
+    cells = sorted(_cells_of(probes))
+    stored = spark.read.parquet(f"{path}/{codec.rel}").filter(
+        F.col("cell_id").isin(cells)
+    )
+    rank = codec.ranker(spark, path, k, rerank, id_col, query_id_col)
+    return rank(codec.score(stored.join(F.broadcast(probes), on="cell_id")))
+
+
+def probe_ladder(n_probe: int, n_cells: int) -> list[int]:
+    """The deterministic probe-widening ladder for filtered search:
+    ``n_probe, 2·n_probe, 4·n_probe, …`` capped at ``n_cells`` (the
+    final rung always probes everything, so k is guaranteed whenever
+    the filtered corpus holds k rows).  Part of the result contract —
+    the SQL twin derives each query's effective probe count from the
+    same rungs."""
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
+    ladder: list[int] = []
+    p = n_probe
+    while p < n_cells:
+        ladder.append(p)
+        p *= 2
+    ladder.append(n_cells)
+    return ladder
+
+
+def _search_index_filtered(
+    codec,
+    spark,
+    path: str,
+    queries: DataFrame,
+    where: str,
+    k: int,
+    n_probe: int,
+    rerank: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    frozen: Sequence,
+) -> DataFrame:
+    """The probe ladder: per query, the effective probe count is the
+    FIRST :func:`probe_ladder` rung whose top-p cells hold ≥ k stored
+    rows satisfying ``where`` (else the final probe-everything rung),
+    and the result is the codec's top-k over the filtered rows of
+    those cells.  Only STARVED queries escalate to the next rung."""
+    from .staging import stage
+
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    frozen = _frozen_params(spark, path, codec, frozen)
+    ladder = probe_ladder(n_probe, len(frozen[0]))
+    rank = codec.ranker(spark, path, k, rerank, id_col, query_id_col)
+    # ONE ranked probe frame at the WIDEST rung (r16 opt, the multidial
+    # prefix-derivation lesson): rung p's probe rows are exactly
+    # ``__pr <= p`` of the descending cell ordering, so the per-rung
+    # probe construction and the per-rung probed-cells collect both
+    # collapse into one bounded job (|Q|·n_cells rows — dials, not
+    # data).  Queries with non-finite vectors have no probe rows and can
+    # never produce output, so they drop from ``pending`` up front.
+    probes_all = codec.probes(
+        queries, frozen, ladder[-1], query_id_col, query_vec_col, rank_col="__pr"
+    )
+    probe_rows = probes_all.select(query_id_col, "cell_id", "__pr").collect()
+    pending = {r[query_id_col] for r in probe_rows}
+    parts: list[DataFrame] = []
+    for p in ladder:
+        if not pending:
+            break
+        probes = probes_all.filter(
+            F.col(query_id_col).isin(*pending) & (F.col("__pr") <= p)
+        ).drop("__pr")
+        cells = sorted(
+            {
+                r["cell_id"]
+                for r in probe_rows
+                if r[query_id_col] in pending and r["__pr"] <= p
+            }
+        )
+        stored = (
+            spark.read.parquet(f"{path}/{codec.rel}")
+            .filter(F.col("cell_id").isin(cells))
+            .filter(F.expr(where))
+        )
+        # staged once: feeds BOTH the starvation count and the ranking
+        scored = stage(
+            codec.score(stored.join(F.broadcast(probes), on="cell_id"))
+        )
+        counts = {
+            r[query_id_col]: r["__nc"]
+            for r in scored.groupBy(query_id_col)
+            .agg(F.count(F.lit(1)).alias("__nc"))
+            .collect()
+        }
+        done = (
+            set(pending)
+            if p == ladder[-1]
+            else {q for q in pending if counts.get(q, 0) >= k}
+        )
+        if done:
+            parts.append(rank(scored.filter(F.col(query_id_col).isin(*done))))
+        pending -= done
+    if not parts:
+        # no queries survived the id collect (empty/NULL-id batch):
+        # return an empty frame with the ranked-output contract types
+        probes = codec.probes(
+            queries, frozen, ladder[0], query_id_col, query_vec_col
+        )
+        empty = (
+            spark.read.parquet(f"{path}/{codec.rel}")
+            .filter(F.lit(False))
+            .join(F.broadcast(probes), on="cell_id")
+        )
+        return rank(codec.score(empty))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def build_ivf_index(
+    embeddings: DataFrame,
+    path: str,
+    n_cells: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids: DataFrame | None = None,
+    meta_cols: Sequence[str] = (),
+) -> list:
+    """Materialize a PERSISTED raw IVF index (layout: the module
+    docstring): the corpus assigned to its coarse cells and written as
+    parquet PARTITIONED BY ``cell_id``, plus the centroid table.
+
+    This is the build-once/search-many shape a deployment actually
+    runs — :func:`top_k_ann_ivf` re-derives the assignment per query
+    set, which is right for ad-hoc checks and wrong for a serving
+    index.  Partitioning by cell is the load-bearing choice: probing
+    becomes DIRECTORY-level partition pruning, so a search touches
+    ``n_probe/n_cells`` of the stored bytes no matter how large the
+    corpus grows (verified by plan test: `PartitionFilters` on
+    ``cell_id``, not a post-scan filter).  ``meta_cols`` carries
+    filterable metadata INTO the cell files so a filtered search
+    pushes its predicate down to the pruned scan.
+
+    Returns the frozen centroid rows just written, for a
+    build-then-merge/search caller to thread through."""
+    return _build_index(
+        _RAW, embeddings, path, n_cells, id_col, vec_col, centroids, meta_cols
+    )[0]
+
+
+def build_ivfpq_index(
+    embeddings: DataFrame,
+    path: str,
+    n_cells: int = 8,
+    m: int = 4,
+    k_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids: DataFrame | None = None,
+    codebooks: DataFrame | None = None,
+    seed: int = 42,
+    meta_cols: Sequence[str] = (),
+) -> tuple[list, dict]:
+    """Materialize a PERSISTED IVF-PQ index (layout: the module
+    docstring) — what a 100-TB serving deployment actually stores.
+    The raw :func:`build_ivf_index` keeps full float vectors in every
+    cell — at 64 dims that is 512 B/vector scanned per probe; this
+    index stores ``m·log2(k_codes)``-bit PQ codes of the cell residual
+    (16 bits/vector at the defaults) plus the exact norm, so a probe
+    reads ~30× fewer corpus bytes, and keeps the raw vectors in a
+    SEPARATE relation fetched BY ID only for the ≤ ``rerank·k``
+    exact-re-rank candidates.
+
+    Same deterministic seed quantizer as the raw index; codebooks are
+    the seeded driver-Lloyd fit of :func:`train_pq_codebooks` on the
+    residual frame — engine-specific (rows-only for the driver), with
+    recall floors and the bytes ratio pinned in unit tests.
+    ``meta_cols`` rides into the code files (the filter decision is
+    made before any raw vector is fetched).
+
+    Returns ``(cent_rows, by_sub)`` — the frozen parameters just
+    written — for a build-then-merge/search caller to thread through."""
+    return _build_index(
+        _PQ,
+        embeddings,
+        path,
+        n_cells,
+        id_col,
+        vec_col,
+        centroids,
+        meta_cols,
+        m=m,
+        k_codes=k_codes,
+        seed=seed,
+        codebooks=codebooks,
+    )
+
+
+def add_to_ivf_index(
+    delta: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    cent_rows: list | None = None,
+    stored_meta: list[str] | None = None,
+) -> None:
+    """Incremental raw-index maintenance: assign a DELTA batch to the
+    index's FROZEN centroids and UPSERT it by id into the persisted
+    cells — the N+δ ingestion shape.  Only the cell partitions the
+    delta touches (including the prior cell of a re-assigned vector)
+    are rewritten; untouched cell directories are never read or
+    written, and cells the update empties are deleted.  Re-applying
+    the same delta (a foreachBatch replay) is idempotent.
+
+    ``cent_rows`` / ``stored_meta``: the frozen centroids and the
+    stored schema are batch-independent, so a per-run maintenance loop
+    collects them once and threads them through every merge.  Default
+    ``None`` reads them from ``path``."""
+    _merge_index(_RAW, delta, path, id_col, vec_col, (cent_rows,), stored_meta)
+
+
+def add_to_ivfpq_index(
+    delta: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    cent_rows: list | None = None,
+    by_sub: dict | None = None,
+    stored_meta: list[str] | None = None,
+) -> None:
+    """Incremental IVF-PQ index maintenance: the delta batch is
+    assigned to the index's FROZEN centroids, residual-encoded with
+    its FROZEN codebooks, and merged into the touched code cells
+    (dynamic partition overwrite); its raw vectors append to the by-id
+    re-rank relation.  The merged index is bit-identical to a fresh
+    build over corpus ∪ delta with the same frozen parameters (pinned
+    in tests/test_ivfpq_index.py).
+
+    Delta ids must be NEW, or byte-identical REPLAYS (safe: both legs
+    are idempotent).  A CHANGED vector for a stored id is REJECTED —
+    route true updates through :func:`update_ivfpq_index`.
+
+    ``cent_rows`` / ``by_sub`` / ``stored_meta``: frozen,
+    batch-independent state a per-run caller (the streaming drain)
+    collects once; default ``None`` reads them from ``path``."""
+    _merge_index(
+        _PQ, delta, path, id_col, vec_col, (cent_rows, by_sub), stored_meta
+    )
 
 
 def update_ivfpq_index(
@@ -2854,6 +2656,165 @@ def update_ivfpq_index(
     add_to_ivfpq_index(delta, path, id_col=id_col, vec_col=vec_col)
 
 
+def delete_from_ivf_index(
+    delta_ids: DataFrame, path: str, id_col: str = "vec_id"
+) -> None:
+    """Erasure from a persisted ANN index (r13): remove every stored
+    row whose id appears in ``delta_ids`` — the right-to-be-forgotten
+    shape at the INDEX layer.  Deleting a user from the corpus table
+    is not enough once their vectors are serving traffic; the index
+    must forget them too, without a rebuild.
+
+    Only cells holding a target id are rewritten (narrow id+cell
+    column-pruned scan semi-joined to the bounded id batch — the same
+    probe the raw merge uses for upsert); cells emptied by the delete
+    are removed outright rather than left as stale directories.
+    Covers both codecs in one call: the raw index's ``cells``, the PQ
+    index's ``codes``, and the PQ by-id ``vectors`` re-rank relation
+    (unpartitioned — anti-join rewrite through a lineage cut).
+    Idempotent: re-deleting absent ids touches nothing."""
+    spark = delta_ids.sparkSession
+    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        delete_partition_dirs,
+        hadoop_path_exists,
+        overwrite_partitions_dynamic,
+    )
+
+    ids = delta_ids.select(id_col).distinct().persist()
+    try:
+        for codec in (_RAW, _PQ):
+            p = f"{path}/{codec.rel}"
+            if not hadoop_path_exists(spark, p):
+                continue
+            try:
+                stored = spark.read.parquet(p)
+            except AnalysisException:
+                # Schema-less root (e.g. a _SUCCESS-only directory
+                # left by an interrupted erasure on a pre-tombstone
+                # layout): nothing is stored, so there is nothing to
+                # forget — treat as already-empty instead of failing
+                # the re-run (r15 / ADVICE).
+                continue
+            prior_cells = _cells_of(
+                stored.select(id_col, "cell_id").join(
+                    F.broadcast(ids), on=id_col, how="left_semi"
+                )
+            )
+            if not prior_cells:
+                continue
+            # Batch-maintenance lineage cut (r14 / ADVICE — the
+            # delete_where/upsert_by_key pattern): a .persist() here
+            # would, on cache loss, RECOMPUTE the survivors from a file
+            # listing the delete_partition_dirs below has already
+            # mutated and die with FileNotFoundException mid-erasure;
+            # localCheckpoint materializes once and never re-lists.
+            survivors = (
+                stored.filter(F.col("cell_id").isin(sorted(prior_cells)))
+                .join(F.broadcast(ids), on=id_col, how="left_anti")
+                .localCheckpoint(eager=True)
+            )
+            present = _cells_of(survivors)
+            # every touched cell is about to empty: probe (BEFORE any
+            # file is deleted) whether the touched set covered the
+            # whole relation — if so the root would hold only _SUCCESS
+            # and the next read would fail to infer schema
+            full_erase = not present and prior_cells >= _cells_of(stored)
+            doomed = prior_cells - present
+            if full_erase:
+                # FULL erasure (r14 / ADVICE): leave a schema'd
+                # tombstone — one EMPTY parquet file inside a single
+                # cell directory, so partition discovery still sees a
+                # well-formed layout, reads/searches return zero rows,
+                # and a later upsert's dynamic overwrite of cell_id=0
+                # replaces it transparently (the unpartitioned
+                # `vectors` leg already gets this for free from its
+                # empty-but-schema'd rewrite).  Written BEFORE any
+                # directory delete (r15 / ADVICE), so a crash inside the
+                # delete leaves the erasure re-runnable.  The overwrite
+                # of cell_id=0 empties that cell itself, so it leaves
+                # the doomed list.
+                survivors.drop("cell_id").repartition(1).write.mode(
+                    "overwrite"
+                ).parquet(f"{p}/cell_id=0")
+                doomed = doomed - {0}
+            delete_partition_dirs(
+                spark,
+                p,
+                ["cell_id"],
+                [(c,) for c in doomed],
+            )
+            if present:
+                overwrite_partitions_dynamic(survivors, p, ["cell_id"])
+        vp = f"{path}/vectors"
+        if hadoop_path_exists(spark, vp):
+            # unpartitioned by-id relation: anti-join rewrite; the
+            # eager lineage cut is what lets the overwrite target the
+            # path being read (upsert_by_key's trade)
+            kept = (
+                spark.read.parquet(vp)
+                .join(F.broadcast(ids), on=id_col, how="left_anti")
+                .localCheckpoint(eager=True)
+            )
+            kept.write.mode("overwrite").parquet(vp)
+    finally:
+        ids.unpersist(blocking=True)
+
+
+def compact_ivf_index(
+    spark, path: str, files_per_cell: int = 1
+) -> None:
+    """Small-file compaction for a persisted ANN index (r13): every
+    delta merge (:func:`add_to_ivf_index` / :func:`add_to_ivfpq_index`)
+    rewrites its touched cells with the write's task parallelism, so a
+    long-running ingest accretes files per cell directory — and a
+    probe pays per file (task launch + footer read), eroding the very
+    directory-pruning advantage the index exists for.  Rewrites each
+    cell to ``files_per_cell`` files through the same dynamic-overwrite
+    compaction as any partitioned table
+    (``sources.writers.compact_partitions``); search results are
+    IDENTICAL before and after (hash-pinned via the shared IVF twin).
+    Covers both codecs' cell relations (the unpartitioned ``vectors``
+    re-rank relation is append-mostly and left to ordinary table
+    compaction)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        compact_partitions,
+        hadoop_path_exists,
+    )
+
+    for codec in (_RAW, _PQ):
+        if hadoop_path_exists(spark, f"{path}/{codec.rel}"):
+            compact_partitions(
+                spark, f"{path}/{codec.rel}", ["cell_id"], files_per_cell
+            )
+
+
+def search_ivf_index(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    cent_rows: list | None = None,
+) -> DataFrame:
+    """Top-k search over a :func:`build_ivf_index` index WITHOUT
+    touching the raw corpus: probe cells chosen against the frozen
+    centroids, only their cell directories read, exact cosine ranked
+    exactly as :func:`top_k_ann_ivf`.  With the same centroids and
+    dials the results are identical to the non-persisted operator (and
+    to its SQL oracle twin).
+
+    ``cent_rows``: a caller that just built or merged the index can
+    pass the frozen centroid rows it already holds, skipping this
+    search's centroid read+collect job."""
+    return _search_index(
+        _RAW, spark, path, queries, k, n_probe, 0, id_col,
+        query_id_col, query_vec_col, (cent_rows,),
+    )
+
+
 def search_ivfpq_index(
     spark,
     path: str,
@@ -2868,41 +2829,63 @@ def search_ivfpq_index(
     by_sub: dict | None = None,
 ) -> DataFrame:
     """Top-k search over a :func:`build_ivfpq_index` index: probe
-    cells chosen map-side against the bounded centroid table, the
-    distinct probed cells become a LITERAL ``isin`` on the partition
-    column (directory pruning — only those cells' CODE files are
-    read, and a code file is ~30× narrower than a raw-vector file),
-    ADC scoring via the same lookup expressions as the in-memory
+    cells chosen against the frozen centroids, only their CODE files
+    read (a code file is ~30× narrower than a raw-vector file), ADC
+    scoring via the same lookup expressions as the in-memory
     operator, then exact re-rank of the ≤ ``rerank·k`` survivors by
     id fetch against ``{path}/vectors``.  With the same dials and
     seeds the results are IDENTICAL to :func:`top_k_ann_ivfpq`
     (pinned in tests/test_ivfpq_index.py) — the persistence
     round-trip is lossless.
 
-    ``cent_rows`` / ``by_sub`` (r16 opt, guide §2.4): build-then-
-    search callers pass the frozen parameters they already hold,
-    skipping two bounded driver collects; doubles round-trip parquet
-    exactly, so the results are byte-identical to re-reading."""
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    probes = _adc_probes(
-        queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
+    ``cent_rows`` / ``by_sub``: build-then-search callers pass the
+    frozen parameters they already hold, skipping two bounded driver
+    collects."""
+    return _search_index(
+        _PQ, spark, path, queries, k, n_probe, rerank, id_col,
+        query_id_col, query_vec_col, (cent_rows, by_sub),
     )
-    # Bounded collect (≤ |Q|·n_probe ints): the literal cell list is
-    # what turns the probe into directory pruning.
-    cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect()
-    )
-    encoded = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell_id").isin(cells)
-    )
-    vectors = spark.read.parquet(f"{path}/vectors")
-    return _adc_rank(
-        encoded, vectors, probes, k, rerank, id_col, query_id_col
+
+
+def search_ivf_index_filtered(
+    spark,
+    path: str,
+    queries: DataFrame,
+    where: str,
+    k: int = 5,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    cent_rows: list | None = None,
+) -> DataFrame:
+    """FILTERED top-k over a persisted IVF index — the
+    metadata-predicate × ANN composition every vector store serves
+    ("nearest docs WHERE lang='en'"), on the pruned index instead of
+    the full corpus (``vec_filtered_topk`` is the exact-bruteforce
+    form; at 100 TB the filter must ride the index).
+
+    Semantics (PRE-filter, k-guaranteed): per query, the effective
+    probe count is the FIRST rung of :func:`probe_ladder` whose top-p
+    cells contain ≥ k corpus vectors satisfying ``where`` (else the
+    final probe-everything rung), and the result is the exact cosine
+    top-k over the filtered vectors in those cells.  This is the
+    recall contract vector stores document for filtered search: a
+    selective predicate can starve the probed cells, so the search
+    widens deterministically rather than returning < k rows.
+
+    Scale shape: BOTH predicates reach the scan — ``cell_id isin``
+    as PartitionFilters (directory pruning) and ``where`` as a pushed
+    data filter (pinned in tests/test_plans.py) — so rung t reads
+    ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes and only
+    STARVED queries escalate (the per-rung candidate count is a
+    bounded ≤|Q|-row collect off the staged rung relation; |Q| is the
+    probe-batch dial, the codebook class of driver-side state).  The
+    widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
+    """
+    return _search_index_filtered(
+        _RAW, spark, path, queries, where, k, n_probe, 0, id_col,
+        query_id_col, query_vec_col, (cent_rows,),
     )
 
 
@@ -2920,120 +2903,21 @@ def search_ivfpq_index_filtered(
     cent_rows: list | None = None,
     by_sub: dict | None = None,
 ) -> DataFrame:
-    """FILTERED top-k over the persisted IVF-PQ index (r14, the
-    r12/r13 verdict queues' carried item): the production serving
-    reality is the metadata predicate AND the compressed index AT
-    ONCE — "nearest docs WHERE lang='en'" against 16-bit codes, raw
-    vectors fetched only for the exact re-rank of survivors.
+    """FILTERED top-k over the persisted IVF-PQ index (r14): the
+    metadata predicate AND the compressed index AT ONCE — "nearest
+    docs WHERE lang='en'" against 16-bit codes, raw vectors fetched
+    only for the exact re-rank of survivors.
 
     Semantics compose :func:`search_ivf_index_filtered`'s recall
     contract with :func:`search_ivfpq_index`'s ADC pipeline: per
     query the effective probe count is the FIRST
     :func:`probe_ladder` rung whose top-p cells hold ≥ k CODE rows
-    satisfying ``where`` (else the final probe-everything rung) — the
-    ladder is re-derived from the FILTERED cell populations, so a
-    selective predicate widens the probe instead of starving the
-    result below k.  Within the chosen rung: ADC approximate scoring
-    over the filtered codes, top ``rerank·k`` per query, exact-cosine
-    re-rank via the by-id ``vectors`` fetch.
-
-    Scale shape: BOTH predicates reach the CODE scan — ``cell_id
-    isin`` as PartitionFilters (directory pruning) and ``where`` as a
-    pushed data filter (plan-pinned in tests/test_plans.py) — and the
-    raw-vector relation is touched only by the ≤ ``rerank·k``-per-
-    query id fetch, AFTER the filter decision; rung t reads
-    ``min(2^t·n_probe, n_cells)/n_cells`` of the code bytes for the
-    still-starved queries only.  The per-rung candidate count is a
-    bounded ≤|Q|-row collect off the staged code×probe join (shared
-    with the ranking — the join is staged once per rung)."""
-    from .staging import stage
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    ladder = probe_ladder(n_probe, len(cent_rows))
-    vectors = spark.read.parquet(f"{path}/vectors")
-    # ONE ranked ADC probe frame at the WIDEST rung (r16 opt — see
-    # search_ivf_index_filtered): rung p = ``__pr <= p``, so the
-    # per-rung probe/LUT expression build and the per-rung cells
-    # collect collapse into one bounded job (|Q|·n_cells rows).
-    # Non-finite-vector queries have no probe rows in either shape.
-    probes_all = _adc_probes(
-        queries,
-        cent_rows,
-        by_sub,
-        ladder[-1],
-        query_id_col,
-        query_vec_col,
-        rank_col="__pr",
+    satisfying ``where`` (else the final probe-everything rung).
+    Within the chosen rung: ADC approximate scoring over the filtered
+    codes, top ``rerank·k`` per query, exact-cosine re-rank via the
+    by-id ``vectors`` fetch — the raw-vector relation is touched only
+    AFTER the filter decision (plan-pinned in tests/test_plans.py)."""
+    return _search_index_filtered(
+        _PQ, spark, path, queries, where, k, n_probe, rerank, id_col,
+        query_id_col, query_vec_col, (cent_rows, by_sub),
     )
-    probe_rows = probes_all.select(
-        query_id_col, "cell_id", "__pr"
-    ).collect()
-    pending = {r[query_id_col] for r in probe_rows}
-    parts: list[DataFrame] = []
-    for p in ladder:
-        if not pending:
-            break
-        probes = probes_all.filter(
-            F.col(query_id_col).isin(*pending) & (F.col("__pr") <= p)
-        ).drop("__pr")
-        cells = sorted(
-            {
-                r["cell_id"]
-                for r in probe_rows
-                if r[query_id_col] in pending and r["__pr"] <= p
-            }
-        )
-        encoded = (
-            spark.read.parquet(f"{path}/codes")
-            .filter(F.col("cell_id").isin(cells))
-            .filter(F.expr(where))
-        )
-        # staged once: feeds BOTH the starvation count and the ranking
-        cand = stage(encoded.join(F.broadcast(probes), on="cell_id"))
-        counts = {
-            r[query_id_col]: r["__nc"]
-            for r in cand.groupBy(query_id_col)
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .collect()
-        }
-        done = (
-            set(pending)
-            if p == ladder[-1]
-            else {q for q in pending if counts.get(q, 0) >= k}
-        )
-        if done:
-            parts.append(
-                _adc_rank_joined(
-                    cand.filter(F.col(query_id_col).isin(*done)),
-                    vectors,
-                    k,
-                    rerank,
-                    id_col,
-                    query_id_col,
-                )
-            )
-        pending -= done
-    if not parts:
-        # no queries survived the id collect (empty/NULL-id batch):
-        # empty frame with the ranked-output contract types
-        probes = _adc_probes(
-            queries, cent_rows, by_sub, ladder[0], query_id_col,
-            query_vec_col,
-        )
-        empty = spark.read.parquet(f"{path}/codes").filter(
-            F.lit(False)
-        ).join(F.broadcast(probes), on="cell_id")
-        return _adc_rank_joined(
-            empty, vectors, k, rerank, id_col, query_id_col
-        )
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out

@@ -713,6 +713,77 @@ FROM base b LEFT JOIN reassembled r ON b.doc_id = r.doc_id
 """
 
 
+def _drain_to_index(
+    stream: DataFrame,
+    index_path: str,
+    checkpoint: str,
+    codec,
+    id_col: str,
+    vec_col: str,
+    **fit,
+) -> tuple | None:
+    """The one ``foreachBatch`` drain behind both persisted-index
+    ingests: the first non-empty micro-batch BUILDS the index,
+    freezing its parameters on that batch, and every later batch
+    delta-merges against the frozen parameters (only the touched cell
+    partitions rewrite).  Returns the frozen parameters, or ``None``
+    when the drain saw no batches, so a post-drain search can thread
+    them instead of re-collecting.
+
+    The build probe targets the codec's LAST-written build artifact
+    (r15 / ADVICE): a crash mid-build can leave earlier artifacts
+    present without it, and probing an earlier one would route every
+    replay to the merge path, which dies reading the missing
+    parameters and never converges — probing the last one replays an
+    interrupted build through the overwrite-mode rebuild instead.
+    It is a Hadoop FS probe, not ``os.path``: on a remote store
+    (hdfs://, s3a://) a local-only check would read False forever
+    and rebuild the index every batch.
+
+    The frozen parameters and the stored schema are batch-independent,
+    so they are cached once per RUN (r16 opt): built here, or — on a
+    replay/restart whose first batch is a merge — read from disk once
+    (a pre-existing index may carry metadata columns, so the schema is
+    read, not assumed).  Closure state only: a crash-replay restart
+    starts empty."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
+    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        hadoop_path_exists,
+    )
+
+    state: dict = {}
+
+    def _admit(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        if not hadoop_path_exists(spark, f"{index_path}/{codec.params[-1]}"):
+            state["frozen"] = lvec._build_index(
+                codec, batch_df, index_path, id_col=id_col, vec_col=vec_col,
+                centroids=None, meta_cols=(), **fit,
+            )
+            # built by THIS drain with meta_cols=() — schema known
+            state["meta"] = []
+        else:
+            if "frozen" not in state:
+                state["frozen"] = lvec._frozen_params(spark, index_path, codec)
+                state["meta"] = lvec._stored_meta(spark, index_path, codec, id_col)
+            lvec._merge_index(
+                codec, batch_df, index_path, id_col, vec_col,
+                state["frozen"], state["meta"],
+            )
+        release_staging(blocking=True)
+
+    q = (
+        stream.writeStream.foreachBatch(_admit)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return state.get("frozen")
+
+
 def stream_ann_index_ingest(
     stream: DataFrame,
     index_path: str,
@@ -726,11 +797,11 @@ def stream_ann_index_ingest(
     micro-batch builds the index — FREEZING the seed coarse quantizer
     on that batch's ``n_cells`` smallest-id vectors — and every later
     batch delta-merges against the frozen centroids
-    (:func:`llm.vectors.add_to_ivf_index`: assignment is map-side
-    against literal centroids; only the touched cell partitions are
-    rewritten).  This is the continuous shape of a serving vector
-    index: embeddings arrive from an upstream encoder and the index
-    absorbs them without a rebuild, cost per batch ∝ delta size.
+    (:func:`llm.vectors.add_to_ivf_index`).  On an index that already
+    exists every batch merges.  This is the continuous shape of a
+    serving vector index: embeddings arrive from an upstream encoder
+    and the index absorbs them without a rebuild, cost per batch ∝
+    delta size.
 
     Replay safety: the merge is an UPSERT by id (re-applying the same
     batch after a crash-before-checkpoint-commit yields the identical
@@ -741,79 +812,16 @@ def stream_ann_index_ingest(
     full-corpus build's, so a post-ingest :func:`llm.vectors
     .search_ivf_index` is hash-checkable against the SAME static IVF
     twin as ``vec_ivf_index_search`` — the hash proves build, three
-    merges, partition pruning, and search in one pass."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
-        _collect_centroids,
-        add_to_ivf_index,
-        build_ivf_index,
-    )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        hadoop_path_exists,
-    )
+    merges, partition pruning, and search in one pass.
 
-    # Per-RUN cache of the frozen, batch-independent merge state (r16
-    # opt — the KS-monitor lesson, guide §2.4): the centroids are
-    # frozen at build time and the streaming drain builds with
-    # meta_cols=(), so every merge in this run shares one collected
-    # copy instead of re-reading + re-collecting per micro-batch.
-    # Closure state only — it lives exactly as long as this drain; a
-    # crash-replay restart gets a fresh empty dict and falls back to
-    # the read-from-path default inside add_to_ivf_index's params.
-    frozen: dict = {}
+    Returns the frozen centroid rows (``None`` when the drain saw no
+    batches)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import _RAW
 
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # Hadoop FS probe, not os.path.exists: the index path is a
-        # Hadoop path (hdfs://, s3a://, file:) — a local-only check
-        # would read False forever on a remote store and silently
-        # REBUILD the index every batch, discarding all prior merges.
-        if not hadoop_path_exists(spark, f"{index_path}/centroids"):
-            frozen["cent"] = build_ivf_index(
-                batch_df,
-                index_path,
-                n_cells=n_cells,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            # built by THIS drain with meta_cols=() — schema known
-            frozen["meta"] = []
-        else:
-            if "cent" not in frozen:
-                # replay/restart path: first batch of this run is a
-                # merge — collect the frozen state once from disk
-                # (a pre-existing index may carry metadata columns,
-                # so the schema is read, not assumed)
-                frozen["cent"] = _collect_centroids(
-                    spark.read.parquet(f"{index_path}/centroids")
-                )
-                stored = spark.read.parquet(f"{index_path}/cells").columns
-                frozen["meta"] = [
-                    c
-                    for c in stored
-                    if c not in (id_col, "__v", "__n", "cell_id")
-                ]
-            add_to_ivf_index(
-                batch_df,
-                index_path,
-                id_col=id_col,
-                vec_col=vec_col,
-                cent_rows=frozen["cent"],
-                stored_meta=frozen["meta"],
-            )
-        release_staging(blocking=True)
-
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    frozen = _drain_to_index(
+        stream, index_path, checkpoint, _RAW, id_col, vec_col, n_cells=n_cells
     )
-    q.awaitTermination()
-    # the frozen centroids (or None when the drain saw no batches) —
-    # a post-drain search threads them instead of re-collecting
-    return frozen.get("cent")
+    return frozen[0] if frozen else None
 
 
 def stream_pq_index_ingest(
@@ -827,108 +835,30 @@ def stream_pq_index_ingest(
     vec_col: str = "embedding",
 ) -> tuple[list | None, dict | None]:
     """Drain an embedding ``stream`` (``availableNow``) into the
-    persisted IVF-PQ index at ``index_path`` (r14, the r12 verdict's
-    #7 carried through r13): the COMPRESSED twin of
-    :func:`stream_ann_index_ingest`.  The first non-empty micro-batch
-    builds the index — freezing BOTH quantizers on that batch (seed
-    coarse centroids + driver-Lloyd PQ codebooks) — and every later
-    batch residual-encodes against the frozen parameters and merges
-    (:func:`llm.vectors.add_to_ivfpq_index`): only touched code-cell
-    partitions rewrite, the raw-vector re-rank relation takes an
-    idempotent by-id append.
+    persisted IVF-PQ index at ``index_path`` (r14): the COMPRESSED
+    twin of :func:`stream_ann_index_ingest`.  The first non-empty
+    micro-batch builds the index — freezing BOTH quantizers on that
+    batch (seed coarse centroids + driver-Lloyd PQ codebooks) — and
+    every later batch residual-encodes against the frozen parameters
+    and merges (:func:`llm.vectors.add_to_ivfpq_index`): only touched
+    code-cell partitions rewrite, the raw-vector re-rank relation
+    takes an idempotent by-id append.
 
-    Replay safety is exactly what the r13 ADVICE #5 fix bought: both
-    merge legs anti-join independently, so a crash-replay ANYWHERE —
-    before the codes write, between the two writes, after both —
-    converges to the identical index; and the r14 true-update guard
-    makes a NON-identical replay (a changed vector for a stored id)
-    fail loud instead of half-applying.  Frozen parameters mean the
-    drained index is bit-identical to a fresh
+    Replay safety: both merge legs anti-join independently, so a
+    crash-replay ANYWHERE converges to the identical index, and the
+    true-update guard makes a NON-identical replay (a changed vector
+    for a stored id) fail loud instead of half-applying.  Frozen
+    parameters mean the drained index is bit-identical to a fresh
     :func:`llm.vectors.build_ivfpq_index` over the full corpus with
     the same centroids/codebooks (pinned in
-    tests/test_ivfpq_index.py) — the serving contract: per-batch cost
-    ∝ delta, retraining deferred to explicit rebuilds."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
-        _collect_centroids,
-        _collect_codebooks,
-        add_to_ivfpq_index,
-        build_ivfpq_index,
-    )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        hadoop_path_exists,
-    )
+    tests/test_ivfpq_index.py).
 
-    # Per-RUN cache of the frozen merge state (r16 opt — the
-    # KS-monitor lesson, guide §2.4): centroids AND PQ codebooks are
-    # frozen at build time, so every merge in this run shares one
-    # collected copy — two driver collect jobs + a schema listing per
-    # micro-batch deleted.  Closure-scoped (lives only for this
-    # drain); a crash-replay restart starts empty and re-collects
-    # once from disk.
-    frozen: dict = {}
+    Returns ``(cent_rows, by_sub)`` (``(None, None)`` when the drain
+    saw no batches)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import _PQ
 
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # Hadoop FS probe, not os.path (hdfs/s3a-correct — the r13
-        # ADVICE #4 contract): a local-only check would read False
-        # forever on a remote store and rebuild every batch.  Probe
-        # the LAST-written build artifact (r15 / ADVICE):
-        # build_ivfpq_index writes codes → vectors → centroids →
-        # codebooks, so a crash mid-build can leave centroids present
-        # without codebooks — probing centroids would then route every
-        # replay to the merge path, which dies reading codebooks and
-        # never converges.  Probing codebooks means an interrupted
-        # build replays through the overwrite-mode rebuild instead
-        # (the raw twin above already probes ITS last artifact,
-        # centroids).
-        if not hadoop_path_exists(spark, f"{index_path}/codebooks"):
-            frozen["cent"], frozen["codes"] = build_ivfpq_index(
-                batch_df,
-                index_path,
-                n_cells=n_cells,
-                m=m,
-                k_codes=k_codes,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            # built by THIS drain with meta_cols=() — schema known
-            frozen["meta"] = []
-        else:
-            if "cent" not in frozen:
-                # replay/restart path: first batch of this run is a
-                # merge — collect the frozen state once from disk
-                frozen["cent"] = _collect_centroids(
-                    spark.read.parquet(f"{index_path}/centroids")
-                )
-                frozen["codes"] = _collect_codebooks(
-                    spark.read.parquet(f"{index_path}/codebooks")
-                )
-                stored = spark.read.parquet(f"{index_path}/codes").columns
-                frozen["meta"] = [
-                    c
-                    for c in stored
-                    if c not in (id_col, "__n", "__codes", "cell_id")
-                ]
-            add_to_ivfpq_index(
-                batch_df,
-                index_path,
-                id_col=id_col,
-                vec_col=vec_col,
-                cent_rows=frozen["cent"],
-                by_sub=frozen["codes"],
-                stored_meta=frozen["meta"],
-            )
-        release_staging(blocking=True)
-
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    frozen = _drain_to_index(
+        stream, index_path, checkpoint, _PQ, id_col, vec_col,
+        n_cells=n_cells, m=m, k_codes=k_codes,
     )
-    q.awaitTermination()
-    # the frozen parameters (or Nones when the drain saw no batches)
-    # — a post-drain search threads them instead of re-collecting
-    return frozen.get("cent"), frozen.get("codes")
+    return frozen if frozen else (None, None)
