@@ -864,29 +864,35 @@ def _q_shingle_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_stage_dir(kind: str, sf_dir: str) -> str:
-    import os
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """Per-scale scratch directory ``<tmp>/spark_graft_<name>/<sf>``."""
     import tempfile
 
     return os.path.join(
         tempfile.gettempdir(),
-        f"spark_graft_{kind}_stage",
+        f"spark_graft_{name}",
         os.path.basename(os.path.normpath(sf_dir)),
     )
 
 
-def _stage_waves(base: str, waves) -> str:
-    """Write each frame in ``waves`` as one single-file parquet wave
-    under ``{base}/src`` with STRICTLY INCREASING mtimes — the file
+def _roundtrip_stage_dir(kind: str, sf_dir: str) -> str:
+    return _scratch_dir(f"{kind}_stage", sf_dir)
+
+
+def _stage_waves(tag: str, sf_dir: str, waves, schema):
+    """The one wave source of every streaming entry: write each frame
+    in ``waves`` as one single-file parquet wave under
+    ``<scratch>/src`` with STRICTLY INCREASING mtimes — the file
     streaming source lists oldest-first, so the mtimes pin the
-    micro-batch order.  The shared staging for every multi-wave
-    streaming entry (dedup ingest, incremental matview): the
-    coalesce(1)-write → part-file move → utime sequence is subtle
-    enough that two copies would drift."""
+    micro-batch order — and open it as a ``maxFilesPerTrigger=1``
+    stream of ``schema`` (the unfiltered frame's).  The scratch dir
+    ``_scratch_dir(tag, sf_dir)`` is wiped first, so the entry's sink
+    and checkpoint under it start fresh.  Returns
+    ``(scratch_dir, stream)``."""
     import glob
-    import os
     import shutil
 
+    base = _scratch_dir(tag, sf_dir)
     src = os.path.join(base, "src")
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(src)
@@ -896,7 +902,22 @@ def _stage_waves(base: str, waves) -> str:
         dst = os.path.join(src, f"wave{k}.parquet")
         shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
         os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
-    return src
+    stream = (
+        waves[0].sparkSession.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return base, stream
+
+
+def _id_waves(frame: DataFrame, id_col: str, splits) -> list:
+    """``frame`` cut into the ``id_col`` range waves at ``splits`` —
+    the same ``CASE`` string the SQL twins tag batches with
+    (:func:`streaming.ingest.ingest_batch_sql`)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import ingest_batch_sql
+
+    cut = F.expr(ingest_batch_sql(id_col, splits))
+    return [frame.filter(cut == k) for k in range(len(splits) + 1)]
 
 
 def _staged_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1355,38 +1376,17 @@ def _q_stream_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`streaming.ingest.line_dedup_ingest_sql`) — the hash
     covers sequential state, the short-line exemption, and
     reassembly order."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_line_dedup_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_line_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base, stream = _stage_waves(
+        "line_dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS),
+        docs.schema,
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["doc_id", "text"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_line_dedup_to_parquet(stream, table, ckpt)
+    stream_line_dedup_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return spark.read.parquet(table).select(
         F.col("ingest_batch").cast("int").alias("ingest_batch"),
         "doc_id",
@@ -1410,9 +1410,6 @@ def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the SAME static IVF twin as
     ``vec_ivf_index_search``, so the driver hash covers the build,
     three merges, directory pruning, and the search in one entry."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
     from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
         _IVF_CELLS,
@@ -1426,33 +1423,18 @@ def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _load_embeddings(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ann_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    vecs = emb.select("vec_id", "embedding")
+    base, stream = _stage_waves(
+        "ann_ingest", sf_dir, _id_waves(vecs, "vec_id", _ANN_INGEST_SPLITS),
+        vecs.schema,
     )
     idx = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["vec_id", "embedding"]
-    bounds = [None, *_ANN_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_ANN_INGEST_SPLITS) + 1):
-        wave = emb.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("vec_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("vec_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)  # rmtree(base) → fresh index/ckpt
-    stream = (
-        spark.readStream.schema(emb.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # r16 opt (guide §2.4): the drain returns the frozen centroids it
     # built/merged with; the post-drain search threads them instead
     # of re-collecting (None falls back to read-from-path)
-    cent = stream_ann_index_ingest(stream, idx, ckpt, n_cells=_IVF_CELLS)
+    cent = stream_ann_index_ingest(
+        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
+    )
     return lvec.search_ivf_index(
         spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
         cent_rows=cent,
@@ -1474,9 +1456,6 @@ def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     as every production-dial PQ entry); the drained-index ≡ frozen-
     parameter full rebuild and the two-wave crash-replay are pinned
     in tests/test_ivfpq_index.py."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
     from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
         _IVF_CELLS,
@@ -1490,33 +1469,16 @@ def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _load_embeddings(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_pq_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    vecs = emb.select("vec_id", "embedding")
+    base, stream = _stage_waves(
+        "pq_ingest", sf_dir, _id_waves(vecs, "vec_id", _ANN_INGEST_SPLITS),
+        vecs.schema,
     )
     idx = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["vec_id", "embedding"]
-    bounds = [None, *_ANN_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_ANN_INGEST_SPLITS) + 1):
-        wave = emb.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("vec_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("vec_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)  # rmtree(base) → fresh index/ckpt
-    stream = (
-        spark.readStream.schema(emb.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # r16 opt (guide §2.4): the drain returns the frozen parameters;
     # the post-drain search threads them instead of re-collecting
     cent, codes = stream_pq_index_ingest(
-        stream, idx, ckpt, n_cells=_IVF_CELLS
+        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
     )
     return lvec.search_ivfpq_index(
         spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
@@ -1535,37 +1497,18 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sequential admission with chained CTEs
     (:func:`streaming.ingest.dedup_ingest_sql`), so the hash covers
     ordering, intra-batch dedup, and both anti-join predicates."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_dedup_ingest_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    base, stream = _stage_waves(
+        "dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS),
+        docs.schema,
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["doc_id", "text", "lang", "n_chars"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # recompute mode — the BACKFILL shape this entry actually is
     # (three waves of one static corpus, delta ≫ accumulated corpus);
     # measured 5.0 s vs 8.9-9.9 s for the indexed mode at sf0.1, where
@@ -1573,7 +1516,7 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (index_path=...) is the long-lived-stream shape (corpus ≫ delta)
     # — admitted set proven identical by the parametrized test in
     # tests/test_streaming.py and this same oracle.
-    stream_dedup_ingest_to_parquet(stream, table, ckpt)
+    stream_dedup_ingest_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(table)
         .select(
@@ -1600,39 +1543,21 @@ def _q_stream_doc_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (:func:`streaming.ingest.doc_dedup_ingest_sql`) — no
     chained CTEs.  The hash covers sequential state, the all-seen
     index, intra-batch keep-first, and the NULL-text exemption."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_doc_dedup_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_doc_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    base, stream = _stage_waves(
+        "doc_dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS),
+        docs.schema,
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    index = os.path.join(base, "index")
-    cols = ["doc_id", "text", "lang", "n_chars"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream_doc_dedup_to_parquet(
+        stream, table, os.path.join(base, "ckpt"), os.path.join(base, "index")
     )
-    stream_doc_dedup_to_parquet(stream, table, ckpt, index)
     return (
         spark.read.parquet(table)
         .select(
@@ -1655,9 +1580,6 @@ def _q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic overwrite of their own partition (replay-safe).  Batches
     are independent given the frozen reference, so the oracle is the
     batch PSI twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_psi_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
@@ -1665,20 +1587,11 @@ def _q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = [
         cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
     ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_psi_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _stage_waves(
+        "psi_monitor", sf_dir, waves, cur.select(*cols).schema
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_psi_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_psi_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -1706,9 +1619,6 @@ def _q_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel (no binning convention to defend).  One verdict row per
     batch, replay-safe dynamic partition overwrite; the oracle is the
     batch KS twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_ks_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
@@ -1716,20 +1626,11 @@ def _q_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = [
         cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
     ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ks_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _stage_waves(
+        "ks_monitor", sf_dir, waves, cur.select(*cols).schema
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_ks_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_ks_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -1751,9 +1652,6 @@ def _q_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming drift panel (PSI / KS / χ²).  Reference category counts
     frozen once; per-batch profiles land replay-safe; the oracle is
     the batch χ² twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
@@ -1761,20 +1659,11 @@ def _q_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     waves = [
         cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
     ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_chi2_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _stage_waves(
+        "chi2_monitor", sf_dir, waves, cur.select(*cols).schema
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_chi2_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_chi2_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -2509,9 +2398,6 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
     proves the three-wave incremental maintenance converges to exactly
     the full recompute (the defining property of a materialized
     view)."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
         stream_increment_counts_to_parquet,
     )
@@ -2519,30 +2405,14 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_matview",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
     # coalesce: the wave split must PARTITION the source — a bare
     # pmod(NULL, 3) == k is NULL-false in every wave, so a NULL-id
     # event would silently never be delivered while the full-recompute
     # oracle counts it (r8 cdc-replay probe finding; same class as the
     # pack_bins NULL-id drop).  NULL ids ride wave 0.
-    src = _stage_waves(
-        base,
-        [
-            ev.filter(
-                F.coalesce(F.pmod(F.col("event_id"), F.lit(3)), F.lit(0))
-                == k
-            )
-            for k in range(3)
-        ],
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    wave_of = F.coalesce(F.pmod(F.col("event_id"), F.lit(3)), F.lit(0))
+    base, stream = _stage_waves(
+        "matview", sf_dir, [ev.filter(wave_of == k) for k in range(3)], ev.schema
     )
     view = os.path.join(base, "view")
     stream_increment_counts_to_parquet(
@@ -2586,11 +2456,6 @@ def _q_cdc_out_of_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically before delivery (a CDC stream needs a per-key
     total order on its version column; the twin applies the same
     collapse)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import Window
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
         stream_merge_to_parquet,
     )
@@ -2620,16 +2485,8 @@ def _q_cdc_out_of_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ranked.filter((F.pmod(rn, F.lit(3)) == 1) | (rn <= 3)),
     ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_cdc_ooo",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    src = _stage_waves(base, [w.drop("__rn") for w in waves])
-    stream = (
-        spark.readStream.schema(uniq.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base, stream = _stage_waves(
+        "cdc_ooo", sf_dir, [w.drop("__rn") for w in waves], uniq.schema
     )
     table = os.path.join(base, "table")
     stream_merge_to_parquet(

@@ -6,6 +6,7 @@ skipped) so written partitions align with declared batch indices.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import psi_profile
@@ -58,10 +59,31 @@ def test_stream_batch_equals_batch_operator(spark, tmp_path):
     assert got == want
 
 
-def test_stream_replay_overwrites_not_duplicates(spark, tmp_path):
-    ref = _vals(spark, range(100))
-    batch = _vals(spark, range(30, 80))
-    base = str(tmp_path / "m2")
+def _cats(spark, pairs):
+    return spark.createDataFrame(
+        [(c,) for c, n in pairs for _ in range(n)], "event_type string"
+    )
+
+
+@pytest.mark.parametrize("kind", ["psi", "ks", "chi2"])
+def test_stream_replay_overwrites_not_duplicates(spark, tmp_path, kind):
+    """A fresh checkpoint replays the wave with the SAME batch id; each
+    monitor's dynamic partition overwrite must leave one copy of the
+    batch's profile, not two."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import (
+        stream_chi2_monitor,
+        stream_ks_monitor,
+    )
+
+    monitor, ref, batch, n_rows = {
+        "psi": (stream_psi_monitor, _vals(spark, range(100)),
+                _vals(spark, range(30, 80)), 10),
+        "ks": (stream_ks_monitor, _vals(spark, range(60)),
+               _vals(spark, range(20, 80)), 1),
+        "chi2": (stream_chi2_monitor, _cats(spark, [("a", 30), ("b", 20)]),
+                 _cats(spark, [("a", 10), ("b", 25), ("c", 5)]), 3),
+    }[kind]
+    base = str(tmp_path / kind)
     src = _stage_single_wave(spark, batch, base)
     out = os.path.join(base, "profiles")
 
@@ -71,14 +93,13 @@ def test_stream_replay_overwrites_not_duplicates(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        stream_psi_monitor(stream, ref, out, os.path.join(base, ck))
-        return spark.read.parquet(out).orderBy("bucket").collect()
+        monitor(stream, ref, out, os.path.join(base, ck))
+        profiles = spark.read.parquet(out)
+        return profiles.orderBy(*profiles.columns).collect()
 
     first = _run("ckpt_a")
-    # fresh checkpoint = the wave replays with the SAME batch id; the
-    # dynamic partition overwrite must leave one copy, not two
     second = _run("ckpt_b")
-    assert second == first
+    assert second == first and len(first) == n_rows
 
 
 def test_stream_empty_batch_scored_full_spine(spark, tmp_path):
@@ -155,29 +176,6 @@ def test_stream_ks_empty_batch_scored_null_stat(spark, tmp_path):
     assert rows[0].n_a == 10 and rows[0].n_b == 0
 
 
-def test_stream_ks_replay_overwrites_not_duplicates(spark, tmp_path):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_ks_monitor
-
-    ref = _vals(spark, range(60))
-    batch = _vals(spark, range(20, 80))
-    base = str(tmp_path / "k3")
-    src = _stage_single_wave(spark, batch, base)
-    out = os.path.join(base, "verdicts")
-
-    def _run(ck):
-        stream = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_ks_monitor(stream, ref, out, os.path.join(base, ck))
-        return spark.read.parquet(out).collect()
-
-    first = _run("ckpt_a")
-    second = _run("ckpt_b")
-    assert second == first and len(first) == 1
-
-
 # -------------------------------------------------------- χ² monitor
 
 
@@ -185,13 +183,8 @@ def test_stream_chi2_batch_equals_batch_operator(spark, tmp_path):
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import chi2_drift
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
-    def _cats(pairs):
-        return spark.createDataFrame(
-            [(c,) for c, n in pairs for _ in range(n)], "event_type string"
-        )
-
-    ref = _cats([("a", 30), ("b", 20)])
-    batch = _cats([("a", 10), ("b", 25), ("c", 5)])
+    ref = _cats(spark, [("a", 30), ("b", 20)])
+    batch = _cats(spark, [("a", 10), ("b", 25), ("c", 5)])
     base = str(tmp_path / "c1")
     src = _stage_single_wave(spark, batch, base)
     stream = (

@@ -382,7 +382,7 @@ def test_merge_sinks_distinguish_missing_from_unreadable():
     micro-batch."""
     from pyspark.errors import AnalysisException
 
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.drain import (
         _is_missing_table,
     )
 
@@ -451,6 +451,32 @@ def test_stream_ann_index_ingest_merges_into_prebuilt_index(
     assert hits and hits[0].vec_id == hits[0].query_id
 
 
+_DOC_SCHEMA = "doc_id long, text string, lang string, n_chars long"
+
+
+def _stage_doc_waves(spark, tmp_path, waves, prefix, schema=_DOC_SCHEMA):
+    """One single-file parquet wave per list, mtime-ordered."""
+    import glob
+    import os
+    import shutil
+
+    src = str(tmp_path / f"{prefix}_src")
+    os.makedirs(src)
+    for k, rows in enumerate(waves):
+        stage = str(tmp_path / f"{prefix}_stage{k}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        dst = os.path.join(src, f"wave{k}.parquet")
+        shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
 @pytest.mark.parametrize("indexed", [False, True])
 def test_stream_dedup_ingest_sequential_admission(spark, tmp_path, indexed):
     """Streaming dedup ingest: batch k must anti-join against the
@@ -461,10 +487,6 @@ def test_stream_dedup_ingest_sequential_admission(spark, tmp_path, indexed):
     without a per-batch release Spark's cache manager substitutes
     batch k-1's file listing into batch k's corpus read — wave-2
     near-dups of wave-1 docs were silently admitted."""
-    import glob
-    import os
-    import shutil
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_dedup_ingest_to_parquet,
     )
@@ -482,24 +504,9 @@ def test_stream_dedup_ingest_sequential_admission(spark, tmp_path, indexed):
          (4, "one two three four five six seven", "en", 10),
          (5, "completely different content lives in this row", "en", 11)],
     ]
-    src = str(tmp_path / "ing_src")
     table = str(tmp_path / "ing_table")
     ckpt = str(tmp_path / "ing_ckpt")
-    os.makedirs(src)
-    schema = "doc_id long, text string, lang string, n_chars long"
-    for k, rows in enumerate(waves):
-        stage = str(tmp_path / f"ing_stage{k}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        dst = os.path.join(src, f"wave{k}.parquet")
-        shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _stage_doc_waves(spark, tmp_path, waves, "ing")
     stream_dedup_ingest_to_parquet(
         stream,
         table,
@@ -527,35 +534,20 @@ def test_stream_dedup_ingest_replay_ignores_own_partition(
     empty (silent loss).  Simulated by pre-seeding the batch-2
     partition (and index partition) with the crashed attempt's output
     before the stream runs."""
-    import glob
-    import os
-    import shutil
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_dedup_ingest_to_parquet,
     )
 
-    schema = "doc_id long, text string, lang string, n_chars long"
     waves = [
         [(1, "one two three four five six seven", "en", 10)],
         [(2, "alpha beta gamma delta epsilon zeta", "en", 10)],
         [(5, "completely different content lives in this row", "en", 11)],
     ]
-    src = str(tmp_path / "rp_src")
     table = str(tmp_path / "rp_table")
     ckpt = str(tmp_path / "rp_ckpt")
     index = str(tmp_path / "rp_index")
-    os.makedirs(src)
-    for k, rows in enumerate(waves):
-        stage = str(tmp_path / f"rp_stage{k}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        dst = os.path.join(src, f"wave{k}.parquet")
-        shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
     # crashed batch-2 attempt: its own admitted output already on disk
-    spark.createDataFrame(waves[2], schema).write.mode("overwrite").parquet(
+    spark.createDataFrame(waves[2], _DOC_SCHEMA).write.mode("overwrite").parquet(
         f"{table}/ingest_batch=2"
     )
     if indexed:
@@ -565,14 +557,10 @@ def test_stream_dedup_ingest_replay_ignores_own_partition(
         )
 
         _delta_features(
-            spark.createDataFrame(waves[2], schema),
+            spark.createDataFrame(waves[2], _DOC_SCHEMA),
             "doc_id", "text", 6, 3, 3,
         ).write.mode("overwrite").parquet(f"{index}/ingest_batch=2")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _stage_doc_waves(spark, tmp_path, waves, "rp")
     stream_dedup_ingest_to_parquet(
         stream, table, ckpt, index_path=index if indexed else None
     )
@@ -581,30 +569,6 @@ def test_stream_dedup_ingest_replay_ignores_own_partition(
         for r in spark.read.parquet(table).collect()
     }
     assert got == {1: 0, 2: 1, 5: 2}  # doc 5 survives the replay
-
-
-def _stage_doc_waves(spark, tmp_path, waves, prefix):
-    """One single-file parquet wave per list, mtime-ordered."""
-    import glob
-    import os
-    import shutil
-
-    src = str(tmp_path / f"{prefix}_src")
-    os.makedirs(src)
-    schema = "doc_id long, text string, lang string, n_chars long"
-    for k, rows in enumerate(waves):
-        stage = str(tmp_path / f"{prefix}_stage{k}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        dst = os.path.join(src, f"wave{k}.parquet")
-        shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
 
 
 # chain fixture for the keep-first-over-all-seen semantics: B is a
@@ -681,9 +645,7 @@ def test_stream_doc_dedup_equals_global_batch(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(table).collect()
     )
     all_rows = [r for w in waves for r in w]
-    df = spark.createDataFrame(
-        all_rows, "doc_id long, text string, lang string, n_chars long"
-    )
+    df = spark.createDataFrame(all_rows, _DOC_SCHEMA)
     w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
     exact_first = (
         df.withColumn("__rn", F.row_number().over(w))
@@ -719,12 +681,11 @@ def test_stream_doc_dedup_replay_ignores_own_partition(spark, tmp_path):
     ]
     table = str(tmp_path / "dr_table")
     index = str(tmp_path / "dr_index")
-    schema = "doc_id long, text string, lang string, n_chars long"
-    spark.createDataFrame(waves[2], schema).write.mode("overwrite").parquet(
+    spark.createDataFrame(waves[2], _DOC_SCHEMA).write.mode("overwrite").parquet(
         f"{table}/ingest_batch=2"
     )
     _delta_features(
-        spark.createDataFrame(waves[2], schema), "doc_id", "text", 6, 3, 3
+        spark.createDataFrame(waves[2], _DOC_SCHEMA), "doc_id", "text", 6, 3, 3
     ).write.mode("overwrite").parquet(f"{index}/ingest_batch=2")
     stream = _stage_doc_waves(spark, tmp_path, waves, "dr")
     stream_doc_dedup_to_parquet(
@@ -906,10 +867,6 @@ def test_stream_line_dedup_sequential_lines(spark, tmp_path):
     must drop from every later batch's documents (while short lines
     and fresh lines survive), within-batch duplicates keep their
     first (id, pos) copy, and documents reassemble in order."""
-    import glob
-    import os
-    import shutil
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_line_dedup_to_parquet,
     )
@@ -923,23 +880,10 @@ def test_stream_line_dedup_sequential_lines(spark, tmp_path):
         [(2, f"{fresh}\nshort"), (3, f"also\n{fresh}")],
         [(4, f"{boiler}\n{fresh}\nclosing words")],
     ]
-    src = str(tmp_path / "ld_src")
     table = str(tmp_path / "ld_table")
     ckpt = str(tmp_path / "ld_ckpt")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    for k, rows in enumerate(waves):
-        stage = str(tmp_path / f"ld_stage{k}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        dst = os.path.join(src, f"wave{k}.parquet")
-        shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _stage_doc_waves(
+        spark, tmp_path, waves, "ld", schema="doc_id long, text string"
     )
     stream_line_dedup_to_parquet(stream, table, ckpt)
     got = {r.doc_id: r for r in spark.read.parquet(table).collect()}
@@ -948,3 +892,63 @@ def test_stream_line_dedup_sequential_lines(spark, tmp_path):
     assert got[2].clean_text == f"{fresh}\nshort"
     assert got[3].clean_text == "also" and got[3].n_removed == 1
     assert got[4].clean_text == "closing words" and got[4].n_removed == 2
+
+
+def test_stream_line_dedup_replay_ignores_own_partition(spark, tmp_path):
+    """Crash-replay pin for the line ingest (same construction as the
+    doc-level ingests): a crashed batch-2 attempt leaves its cleaned
+    documents on disk as table/ingest_batch=2.  The replay must not
+    read that partition back as prior lines — wave 2's unique long
+    line would drop as already seen."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+        stream_line_dedup_to_parquet,
+    )
+
+    unique = "a line that only the third wave ever carries"
+    schema = "doc_id long, text string"
+    waves = [
+        [(1, "first wave document with its own long line")],
+        [(2, "second wave document with another long line")],
+        [(5, f"{unique}\nend")],
+    ]
+    table = str(tmp_path / "lr_table")
+    line_dedup(
+        spark.createDataFrame(waves[2], schema),
+        text_col="text",
+        id_col="doc_id",
+        min_len=20,
+    ).write.mode("overwrite").parquet(f"{table}/ingest_batch=2")
+    release_staging()
+    stream = _stage_doc_waves(spark, tmp_path, waves, "lr", schema=schema)
+    stream_line_dedup_to_parquet(stream, table, str(tmp_path / "lr_ckpt"))
+    got = {r.doc_id: r for r in spark.read.parquet(table).collect()}
+    assert sorted(got) == [1, 2, 5]
+    assert got[5].ingest_batch == 2
+    assert got[5].clean_text == f"{unique}\nend" and got[5].n_removed == 0
+
+
+def test_drain_releases_staging_when_a_batch_fails(spark, tmp_path):
+    """The drain's per-batch staging release runs in a ``finally``: a
+    batch that stages a frame and then raises surfaces its error from
+    the drain call and leaves nothing staged on the stream thread."""
+    import threading
+
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import staging
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.drain import drain
+
+    src = str(tmp_path / "fail_src")
+    spark.createDataFrame([(1,), (2,)], "x long").write.parquet(src)
+    threads = []
+
+    def _stage_then_fail(batch_df, batch_id):
+        threads.append(threading.get_ident())
+        staging.stage(batch_df.select("x")).count()
+        raise RuntimeError("batch failed after staging")
+
+    stream = spark.readStream.schema("x long").parquet(src)
+    with pytest.raises(Exception, match="batch failed after staging"):
+        drain(stream, str(tmp_path / "fail_ckpt"), _stage_then_fail)
+    assert threads
+    assert ("thread", threads[0]) not in staging._STAGED

@@ -7,9 +7,12 @@ A live corpus grows by micro-batches, and each batch must be admitted
 only if it is neither an exact nor a near duplicate of what the
 corpus ALREADY holds — the N+δ dedup (:func:`llm.dedup.
 dedup_against_corpus`) driven by Structured Streaming instead of a
-manual batch loop.  ``foreachBatch`` supplies the full batch API per
-micro-batch (read the accumulated table, anti-join, append) while the
-checkpoint tracks source offsets.
+manual batch loop.  Every sink here runs through
+:func:`streaming.drain.drain` (``foreachBatch`` with the full batch
+API per micro-batch — read the accumulated table, anti-join, append —
+while the checkpoint tracks source offsets, plus the per-batch staging
+release), and the dedup sinks read their accumulated state back
+through :func:`streaming.drain.read_before`.
 
 Exactly-once: each micro-batch writes its admitted rows by
 OVERWRITING its own ``<batch_col>=<batch_id>`` partition directory —
@@ -41,12 +44,12 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup impor
     near_dup_banded_sql,
     verified_pairs_from,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging, spread, stage
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import spread, stage
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.text import (
     minhash_signature_from,
     shingled,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import _is_missing_table
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.drain import drain, read_before
 
 
 def _delta_features(
@@ -122,11 +125,11 @@ def stream_dedup_ingest_to_parquet(
        Jaccard ≥ ``threshold``) duplicates of the already-admitted
        corpus (:func:`llm.dedup.dedup_against_corpus`).
 
-    The first batch bootstraps the table.  The bootstrap probe goes
-    through the READER (``AnalysisException`` + missing-path check,
-    :func:`streaming.joins._is_missing_table`) so unreadable-but-
-    present tables fail loudly instead of silently restarting the
-    corpus from one batch.
+    The first batch bootstraps the table.  Every state read is
+    :func:`streaming.drain.read_before` (earlier batches only, so a
+    crash-replay sees the state the original attempt saw; an
+    unreadable-but-present table fails loudly instead of silently
+    restarting the corpus from one batch).
 
     ``index_path`` switches on the INDEXED mode — the shape that
     holds at 100 TB.  Without it, every batch re-shingles and
@@ -153,43 +156,6 @@ def stream_dedup_ingest_to_parquet(
     the indexed one near-flat.  Rule of thumb: backfills and small corpora →
     recompute (no index build/write overhead); any long-lived stream
     past ~10⁵ docs → ``index_path=``."""
-    from pyspark.errors import AnalysisException
-
-    def _read_before(spark, path: str, batch_id: int) -> DataFrame | None:
-        """Accumulated state visible to ``batch_id``: partitions of
-        strictly EARLIER batches only.  A crash between the partition
-        write and the checkpoint commit leaves this batch's own
-        partition on disk; a replay that read it would reject every
-        doc as an exact SELF-duplicate and overwrite the partition
-        with an empty result — silent loss.  Filtering
-        ``batch_col < batch_id`` makes the replay see exactly the
-        state the original attempt saw (partition pruning keeps the
-        filter a directory-level skip, no data read)."""
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        if batch_col in df.columns:
-            df = df.filter(F.col(batch_col) < F.lit(batch_id)).drop(
-                batch_col
-            )
-        return df
-
-    def _read_corpus_with_batches(spark, batch_id: int) -> DataFrame | None:
-        """Accumulated corpus visible to ``batch_id`` WITH its batch
-        column — the index backfill needs each doc's original batch so
-        the backfilled features land in replay-consistent partitions."""
-        try:
-            df = spark.read.parquet(table)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        if batch_col in df.columns:
-            df = df.filter(F.col(batch_col) < F.lit(batch_id))
-        return df
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -206,7 +172,7 @@ def stream_dedup_ingest_to_parquet(
             feats = _delta_features(
                 batch, id_col, text_col, num_hashes, bands, shingle_n
             )
-            index = _read_before(spark, index_path, batch_id)
+            index = read_before(spark, index_path, batch_col, batch_id)
             if index is None:
                 # Corpus-exists-but-index-missing is NOT bootstrap: a
                 # stream migrated from recompute mode has accumulated
@@ -216,7 +182,7 @@ def stream_dedup_ingest_to_parquet(
                 # FOREVER.  Backfill the index from the corpus once
                 # (features recomputed per original batch partition, so
                 # replay visibility rules keep working), then proceed.
-                prior = _read_corpus_with_batches(spark, batch_id)
+                prior = read_before(spark, table, batch_col, batch_id)
                 if prior is not None and prior.head(1):
                     bf = _delta_features(
                         prior, id_col, text_col, num_hashes, bands, shingle_n
@@ -224,7 +190,7 @@ def stream_dedup_ingest_to_parquet(
                     bf.write.mode("overwrite").partitionBy(
                         batch_col
                     ).parquet(index_path)
-                    index = _read_before(spark, index_path, batch_id)
+                    index = read_before(spark, index_path, batch_col, batch_id)
             if index is None:
                 admitted_ids = feats.select(id_col)
             else:
@@ -262,7 +228,7 @@ def stream_dedup_ingest_to_parquet(
             admitted_ids = stage(admitted_ids)
             admitted = batch.join(admitted_ids, on=id_col, how="left_semi")
         else:
-            corpus = _read_before(spark, table, batch_id)
+            corpus = read_before(spark, table, batch_col, batch_id)
             admitted = (
                 batch
                 if corpus is None
@@ -287,24 +253,19 @@ def stream_dedup_ingest_to_parquet(
             ).write.mode("overwrite").parquet(
                 f"{index_path}/{batch_col}={batch_id}"
             )
-        # Per-BATCH staging release, and not only for memory hygiene:
-        # the banded staging persists plan fragments built over the
-        # corpus PATH, and Spark's cache manager substitutes a cached
-        # fragment into any later semantically-equal subplan — so the
-        # NEXT micro-batch's corpus read would silently resolve to
-        # THIS batch's file listing and anti-join against a stale
-        # corpus (observed: wave-2 docs admitted despite wave-1 near
-        # dups).  Releasing after the write materializes drops the
-        # fragments so every batch lists the table fresh.
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
+
+
+def ingest_batch_sql(id_col: str, splits: tuple[int, ...]) -> str:
+    """The micro-batch index of a row whose batches are the
+    ``id_col`` ranges cut at ``splits`` (batch 0 = ids below
+    ``splits[0]``, …, last batch = the rest), as one SQL ``CASE``
+    expression.  The one batch cut: the SQL twins tag and filter with
+    it, and the driver entries split their stream waves on the same
+    string through ``F.expr``."""
+    whens = " ".join(f"WHEN {id_col} < {s} THEN {i}" for i, s in enumerate(splits))
+    return f"CASE {whens} ELSE {len(splits)} END"
 
 
 def dedup_ingest_sql(
@@ -337,22 +298,15 @@ def dedup_ingest_sql(
         id_col=id_col,
         text_col=text_col,
     )
-    bounds = [None, *splits, None]
+    cut = ingest_batch_sql(id_col, splits)
     n_batches = len(splits) + 1
     ctes = [f"__pairs AS ({pairs})"]
     admitted_union = None
     for k in range(n_batches):
-        lo, hi = bounds[k], bounds[k + 1]
-        preds = []
-        if lo is not None:
-            preds.append(f"{id_col} >= {lo}")
-        if hi is not None:
-            preds.append(f"{id_col} < {hi}")
-        where = " AND ".join(preds) or "TRUE"
         # intra-batch exact dedup: keep the min-id copy
         ctes.append(
             f"__d{k} AS (SELECT {id_col}, {text_col}, {out_cols} "
-            f"FROM {table} WHERE {where} "
+            f"FROM {table} WHERE {cut} = {k} "
             f"QUALIFY row_number() OVER (PARTITION BY sha256({text_col}) "
             f"ORDER BY {id_col}) = 1)"
         )
@@ -433,16 +387,6 @@ def stream_doc_dedup_to_parquet(
     cross-batch, so the intra pass must not group them either) and
     have no shingles, so they are always admitted.
     """
-    from pyspark.errors import AnalysisException
-
-    def _read_index_before(spark, batch_id: int) -> DataFrame | None:
-        try:
-            df = spark.read.parquet(index_path)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        return df.filter(F.col(batch_col) < F.lit(batch_id)).drop(batch_col)
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -475,7 +419,7 @@ def stream_doc_dedup_to_parquet(
         admitted_ids = exact_first.join(
             intra_dropped, on=id_col, how="left_anti"
         )
-        index = _read_index_before(spark, batch_id)
+        index = read_before(spark, index_path, batch_col, batch_id)
         if index is not None:
             # cross exact: any earlier SEEN doc with the same hash
             admitted_ids = (
@@ -508,17 +452,8 @@ def stream_doc_dedup_to_parquet(
         feats.write.mode("overwrite").parquet(
             f"{index_path}/{batch_col}={batch_id}"
         )
-        # same cached-fragment hazard as the admission ingest: release
-        # so the next batch lists the index fresh
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
 
 
 def doc_dedup_ingest_sql(
@@ -550,18 +485,10 @@ def doc_dedup_ingest_sql(
         id_col=id_col,
         text_col=text_col,
     )
-    n = len(splits)
-    batch = (
-        "CASE "
-        + " ".join(
-            f"WHEN {id_col} < {s} THEN {i}" for i, s in enumerate(splits)
-        )
-        + f" ELSE {n} END"
-    )
     return f"""
 WITH __pairs AS ({pairs}),
 __ranked AS (
-  SELECT {id_col}, {batch} AS ingest_batch, {out_cols},
+  SELECT {id_col}, {ingest_batch_sql(id_col, splits)} AS ingest_batch, {out_cols},
          CASE WHEN {text_col} IS NULL THEN 1
               ELSE row_number() OVER (PARTITION BY sha256({text_col})
                                       ORDER BY {id_col})
@@ -613,41 +540,28 @@ def stream_line_dedup_to_parquet(
     scripts/measure_ingest_crossover.py) applies verbatim: append
     each batch's new line hashes to an index table and anti-join
     that instead.  Documented upgrade path, same admitted output."""
-    from pyspark.errors import AnalysisException
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
-    def _prior_hashes(spark, batch_id: int) -> DataFrame | None:
-        """sha2 set of every kept line of strictly earlier batches
-        (reading only earlier partitions keeps crash-replay honest,
-        same argument as the doc-level ingest's ``_read_before``)."""
-        try:
-            df = spark.read.parquet(table)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        df = df.filter(F.col(batch_col) < F.lit(batch_id))
-        lines = df.select(
-            F.explode(F.split(F.col("clean_text"), F.lit("\n"))).alias(
-                "__line"
-            )
-        )
-        return (
-            lines.filter(F.length("__line") >= min_len)
-            .select(F.sha2(F.col("__line"), 256).alias("__h"))
-            .distinct()
-        )
-
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prior = _prior_hashes(spark, batch_id)
+        # sha2 set of every kept line of strictly earlier batches
+        prior = read_before(batch_df.sparkSession, table, batch_col, batch_id)
+        hashes = None
+        if prior is not None:
+            hashes = (
+                prior.select(
+                    F.explode(F.split(F.col("clean_text"), F.lit("\n")))
+                    .alias("__line")
+                )
+                .filter(F.length("__line") >= min_len)
+                .select(F.sha2(F.col("__line"), 256).alias("__h"))
+                .distinct()
+            )
         cleaned = line_dedup(
             batch_df,
             text_col=text_col,
             id_col=id_col,
             min_len=min_len,
-            drop_hashes=prior,
+            drop_hashes=hashes,
         ).withColumn(batch_col, F.lit(batch_id))
         (
             cleaned.write.mode("overwrite")
@@ -655,15 +569,8 @@ def stream_line_dedup_to_parquet(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(table)
         )
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
 
 
 def line_dedup_ingest_sql(
@@ -677,13 +584,9 @@ def line_dedup_ingest_sql(
     whole sequential run collapses to ONE window — an eligible line
     instance survives iff it is the row_number()=1 occurrence of its
     text in ``(batch, doc_id, pos)`` order."""
-    n = len(splits)
-    batch = "CASE " + " ".join(
-        f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(splits)
-    ) + f" ELSE {n} END"
     return f"""
 WITH base AS (
-  SELECT doc_id, {batch} AS ingest_batch,
+  SELECT doc_id, {ingest_batch_sql("doc_id", splits)} AS ingest_batch,
          str_split(text, chr(10)) AS ls
   FROM {table}
 ), lines AS (
@@ -722,8 +625,8 @@ def _drain_to_index(
     vec_col: str,
     **fit,
 ) -> tuple | None:
-    """The one ``foreachBatch`` drain behind both persisted-index
-    ingests: the first non-empty micro-batch BUILDS the index,
+    """The one index sink behind both persisted-index ingests, run
+    through :func:`streaming.drain.drain`: the first non-empty micro-batch BUILDS the index,
     freezing its parameters on that batch, and every later batch
     delta-merges against the frozen parameters (only the touched cell
     partitions rewrite).  Returns the frozen parameters, or ``None``
@@ -772,15 +675,8 @@ def _drain_to_index(
                 codec, batch_df, index_path, id_col, vec_col,
                 state["frozen"], state["meta"],
             )
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
     return state.get("frozen")
 
 

@@ -12,16 +12,20 @@ Two pieces the windowed-aggregation layer doesn't cover:
   MERGES each micro-batch into a partitioned parquet table via
   ``writers.upsert_by_key`` (keyed upsert, partition-pruned rewrite)
   instead of appending files: the streaming path to a continuously
-  deduplicated serving table.  foreachBatch gives the batch writer's
-  full API per micro-batch while the checkpoint tracks source
-  offsets, so a crashed job re-merges its last batch idempotently
-  (same keys → same replacement).
+  deduplicated serving table.  Both merge sinks run through
+  :func:`streaming.drain.drain` (``foreachBatch`` gives the batch
+  writer's full API per micro-batch while the checkpoint tracks
+  source offsets, so a crashed job re-merges its last batch
+  idempotently — same keys → same replacement) and probe their table
+  with :func:`streaming.drain.read_existing`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.drain import drain, read_existing
 
 
 def stream_stream_interval_join(
@@ -87,21 +91,6 @@ def stream_static_enrich(
     return stream.join(d, on=on, how=how)
 
 
-def _is_missing_table(exc) -> bool:
-    """True iff an ``AnalysisException`` from a read probe means "no
-    table here yet" (bootstrap), as opposed to a table that EXISTS but
-    cannot be read (schema corruption, permission failure, a crash
-    mid-overwrite).  Conflating the two would let a merge sink silently
-    reinitialize an accumulated view from one micro-batch — so any
-    other failure propagates loudly instead of bootstrapping."""
-    get_cls = getattr(exc, "getErrorClass", None)
-    cls = (get_cls() if callable(get_cls) else None) or ""
-    missing = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-    if cls:
-        return cls in missing
-    return any(m in str(exc) for m in missing)
-
-
 def stream_merge_to_parquet(
     result: DataFrame,
     path: str,
@@ -127,12 +116,12 @@ def stream_merge_to_parquet(
     is key-unique from birth).
 
     Bootstrap-vs-merge is decided by probing the table THROUGH the
-    reader (catching ``AnalysisException``), not ``os.path.exists`` —
-    a local-FS-only check would see nothing on HDFS/S3 and silently
-    overwrite the table every micro-batch; the reader probe follows
-    whatever filesystem the path's scheme names."""
-    from pyspark.errors import AnalysisException
-
+    reader (:func:`streaming.drain.read_existing`), not
+    ``os.path.exists`` — a local-FS-only check would see nothing on
+    HDFS/S3 and silently overwrite the table every micro-batch; the
+    reader probe follows whatever filesystem the path's scheme names,
+    and a table that exists but is unreadable raises instead of
+    bootstrapping."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
         latest_version_rows,
         upsert_by_key,
@@ -141,19 +130,8 @@ def stream_merge_to_parquet(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            # cheap metadata-only probe: resolves footers, reads no rows
-            spark.read.parquet(path).schema
-            exists = True
-        except AnalysisException as exc:
-            # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA (empty dir):
-            # either way there is no table yet.  Anything else (the
-            # table exists but is unreadable) must NOT bootstrap — it
-            # would replace the accumulated view with this batch alone.
-            if not _is_missing_table(exc):
-                raise
-            exists = False
-        if not exists:
+        # cheap metadata-only probe: resolves footers, reads no rows
+        if read_existing(spark, path) is None:
             first = (
                 batch_df
                 if version_col is None
@@ -170,13 +148,7 @@ def stream_merge_to_parquet(
                 version_col=version_col,
             )
 
-    q = (
-        result.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(result, checkpoint, _merge)
 
 
 def stream_increment_counts_to_parquet(
@@ -218,12 +190,9 @@ def stream_increment_counts_to_parquet(
     touched partitions committed and others not — a replayed batch
     re-merges exactly the partitions whose watermark has not reached
     it and leaves committed ones untouched (unpartitioned views use
-    the single global watermark; one directory, one commit).  A read probe that fails
-    for any reason OTHER than path-missing raises instead of
-    bootstrapping — see :func:`_is_missing_table`."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
+    the single global watermark; one directory, one commit).  A read
+    probe that fails for any reason OTHER than path-missing raises
+    instead of bootstrapping (:func:`streaming.drain.read_existing`)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
         overwrite_partitions_dynamic,
         partition_prune_predicate,
@@ -257,24 +226,27 @@ def stream_increment_counts_to_parquet(
             )
         )
 
-    def _read_current(spark, partial: DataFrame) -> DataFrame:
-        """Read the view back with partition values in the PARTIAL's
-        types, not parquet type inference's: a string partition value
-        with numeric shape ("01" → inferred int 1) would never match
-        the batch's tuples in the replay-skip set, so a replayed batch
-        would re-merge an already-committed partition and double-add
-        its partials — and the rewrite would land in a NEW directory
-        (k=1 beside k=01).  Inference off → directory strings → cast
-        to the batch frame's own partition dtypes."""
+    def _read_current(spark, partial: DataFrame) -> DataFrame | None:
+        """Read the view back (``None`` before the first batch) with
+        partition values in the PARTIAL's types, not parquet type
+        inference's: a string partition value with numeric shape
+        ("01" → inferred int 1) would never match the batch's tuples in
+        the replay-skip set, so a replayed batch would re-merge an
+        already-committed partition and double-add its partials — and
+        the rewrite would land in a NEW directory (k=1 beside k=01).
+        Inference off → directory strings → cast to the batch frame's
+        own partition dtypes."""
         if not partition_by:
-            return spark.read.parquet(path)
+            return read_existing(spark, path)
         conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
         prev = spark.conf.get(conf, "true")
         spark.conf.set(conf, "false")
         try:
-            cur = spark.read.parquet(path)
+            cur = read_existing(spark, path)
         finally:
             spark.conf.set(conf, prev)
+        if cur is None:
+            return None
         for c in partition_by:
             cur = cur.withColumn(c, F.col(c).cast(partial.schema[c].dataType))
         return cur
@@ -284,11 +256,8 @@ def stream_increment_counts_to_parquet(
         partial = _agg(batch_df).withColumn(
             "__max_batch_id", F.lit(batch_id).cast("long")
         )
-        try:
-            current = _read_current(spark, partial)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise  # existing-but-unreadable view: never reinit
+        current = _read_current(spark, partial)
+        if current is None:
             write_parquet(partial, path, partition_by=partition_by)
             return
         if partition_by:
@@ -338,11 +307,5 @@ def stream_increment_counts_to_parquet(
         out = _additive(current, partial).localCheckpoint(eager=True)
         write_parquet(out, path)
 
-    q = (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events, checkpoint, _merge)
 

@@ -10,10 +10,12 @@ Shape per micro-batch: the reference's bucket edges are computed
 ONCE up front (a 1-row relation the monitor reuses — frozen edges are
 the PSI convention AND what makes per-batch profiles comparable to
 each other), so each batch costs one tagged-union aggregate over
-``reference ∪ batch``.  Replay safety: results write via dynamic
-partition overwrite of the batch's OWN ``ingest_batch`` partition
-(the ingest.py idiom) — a replayed batch id overwrites itself instead
-of duplicating rows.
+``reference ∪ batch``.  The three monitors differ only in their
+scoring function: all drain through :func:`_drain_profiles`
+(:func:`streaming.drain.drain` plus one writer).  Replay safety:
+results write via dynamic partition overwrite of the batch's OWN
+``ingest_batch`` partition (the ingest.py idiom) — a replayed batch id
+overwrites itself instead of duplicating rows.
 
 At 100 TB the reference side of the union is the dominant cost, so
 the PSI monitor FREEZES it (r11): ``psi_freeze_reference`` scans the
@@ -33,6 +35,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.drain import drain
+
+
+def _drain_profiles(
+    stream: DataFrame, out_path: str, checkpoint: str, score
+) -> None:
+    """Drain ``stream``, writing ``score(batch)`` for every micro-batch
+    into the batch's own ``ingest_batch`` partition at ``out_path``
+    (dynamic overwrite, so a replayed batch id replaces itself).  Empty
+    micro-batches are scored too: skipping them would shift alignment
+    between written partitions and the twin's declared batch indices.
+    The scorers' per-batch staging is released by the drain."""
+
+    def _write(batch: DataFrame, batch_id: int) -> None:
+        (
+            score(batch)
+            .withColumn("ingest_batch", F.lit(int(batch_id)))
+            .coalesce(1)
+            .write.partitionBy("ingest_batch")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(out_path)
+        )
+
+    drain(stream, checkpoint, _write)
+
 
 def stream_psi_monitor(
     stream: DataFrame,
@@ -46,7 +74,6 @@ def stream_psi_monitor(
     ``value_col`` distribution against ``reference`` with
     :func:`~...operators.drift.psi_profile`; per-batch profiles land
     partitioned by ``ingest_batch`` at ``out_path``."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
         psi_freeze_reference,
         psi_profile_frozen,
@@ -57,34 +84,11 @@ def stream_psi_monitor(
     frozen = psi_freeze_reference(
         reference, value_col=value_col, buckets=buckets
     )
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        # empty micro-batches are scored too (an empty cur side is an
-        # all-zero cur_n column over the full bucket spine): skipping
-        # them would shift alignment between written partitions and
-        # the twin's declared batch indices
-        out = psi_profile_frozen(batch, frozen, value_col=value_col)
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            # per-batch staging release (the ingest.py discipline):
-            # psi_profile stages its bucket relation, and an unreleased
-            # stream accumulates pinned blocks batch after batch
-            release_staging(blocking=True)
-
-    (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_profiles(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: psi_profile_frozen(batch, frozen, value_col=value_col),
     )
 
 
@@ -116,7 +120,10 @@ def stream_ks_monitor(
         stage,
         staging_scope,
     )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import ks_2sample
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        ks_2sample,
+        ks_side_counts,
+    )
 
     # the reference's distinct-value CDF state is not a bounded sketch
     # (unlike the PSI edges+counts), so it cannot collapse to driver
@@ -124,10 +131,6 @@ def stream_ks_monitor(
     # relation for the whole run instead of rescanning it per batch.
     # Named scope: foreachBatch runs on the STREAM EXECUTION thread,
     # whose per-batch release must not evict the cross-thread ref.
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        ks_side_counts,
-    )
-
     ref_tag = f"stream_ks_monitor_ref:{out_path}"
     with staging_scope(ref_tag):
         # r15 opt: the reference's per-distinct-value counts are
@@ -143,37 +146,19 @@ def stream_ks_monitor(
         ref_counts = stage(
             ks_side_counts(reference, value_col).repartition("__v")
         )
-    ref_counts.count()
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        out = ks_2sample(
-            reference,
-            batch,
-            value_col=value_col,
-            buckets=buckets,
-            a_counts=ref_counts,
-        )
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            # releases ks_2sample's per-batch stagings (stream-thread
-            # scope) — the named ref scope is untouched
-            release_staging(blocking=True)
-
     try:
-        (
-            stream.writeStream.foreachBatch(_score)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        ref_counts.count()
+        _drain_profiles(
+            stream,
+            out_path,
+            checkpoint,
+            lambda batch: ks_2sample(
+                reference,
+                batch,
+                value_col=value_col,
+                buckets=buckets,
+                a_counts=ref_counts,
+            ),
         )
     finally:
         release_staging(blocking=True, tag=ref_tag)
@@ -219,34 +204,17 @@ def stream_chi2_monitor(
     profiles land partitioned by ``ingest_batch`` (replay-safe
     dynamic overwrite).  Empty micro-batches are scored too (all-zero
     cur_n over the reference's categories)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
         chi2_drift_frozen,
         chi2_freeze_reference,
     )
 
     frozen = chi2_freeze_reference(reference, cat_col=cat_col)
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        out = chi2_drift_frozen(batch, frozen, cat_col=cat_col)
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            release_staging(blocking=True)
-
-    (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_profiles(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: chi2_drift_frozen(batch, frozen, cat_col=cat_col),
     )
 
 
