@@ -51,6 +51,47 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def partitions_read(spark):
+    """``partitions_read(action)`` runs ``action`` and returns the
+    run-time "number of partitions read" summed over every partitioned
+    file scan of the SQL executions it ran, from the SQL status store —
+    what a scan actually read after dynamic partition pruning, not what
+    its plan string promises."""
+    import json
+
+    jvm = spark.sparkContext._jvm
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala, "MODULE$"))
+
+    def as_json(obj):
+        return json.loads(mapper.writeValueAsString(obj))
+
+    def run(action):
+        bus.waitUntilEmpty()
+        before = store.executionsCount()
+        action()
+        bus.waitUntilEmpty()
+        execs = store.executionsList(before, store.executionsCount() - before)
+        total = 0
+        for i in range(execs.size()):
+            eid = execs.apply(i).executionId()
+            accs = [
+                m["accumulatorId"]
+                for node in as_json(store.planGraph(eid).allNodes())
+                for m in node.get("metrics", [])
+                if m["name"] == "number of partitions read"
+            ]
+            values = as_json(store.executionMetrics(eid))
+            total += sum(int(values.get(str(a), "0").replace(",", "")) for a in accs)
+        return total
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def smoke_dir():
     return SMOKE_DIR
 

@@ -639,3 +639,43 @@ def test_pq_index_meta_delta_merge_preserves_metadata(
     assert got_ids == {
         r.vec_id for r in _emb(spark, n=60).where("label = 3").collect()
     }
+
+
+@pytest.fixture(scope="module")
+def _both_indexes(spark, tmp_path_factory):
+    emb = _emb(spark)
+    root = tmp_path_factory.mktemp("read_once")
+    lvec.build_ivf_index(emb, str(root / "raw"), n_cells=8, meta_cols=["label"])
+    lvec.build_ivfpq_index(emb, str(root / "pq"), n_cells=8, meta_cols=["label"])
+    return emb, root
+
+
+@pytest.mark.parametrize(
+    "search",
+    [
+        "search_ivf_index",
+        "search_ivfpq_index",
+        "search_ivf_index_filtered",
+        "search_ivfpq_index_filtered",
+    ],
+)
+def test_index_search_reads_query_frame_once(spark, _both_indexes, search):
+    """One search evaluates each query row ONCE: the query frame passes
+    every row through a counting Python UDF, and after ``collect()``
+    the count must be |Q| — no driver-side probe collect followed by a
+    second read for the broadcast, and no re-read per filtered rung
+    (the selective ``label = 5`` starves the first rungs)."""
+    emb, root = _both_indexes
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(v):
+        seen.add(1)
+        return v
+
+    counted = F.udf(count, "array<float>").asNondeterministic()
+    q = _queries(emb).select("query_id", counted("query_vec").alias("query_vec"))
+    path = str(root / ("pq" if "ivfpq" in search else "raw"))
+    extra = {"where": "label = 5"} if search.endswith("_filtered") else {}
+    rows = getattr(lvec, search)(spark, path, q, k=4, n_probe=2, **extra).collect()
+    assert {r.query_id for r in rows} == {0, 1, 2}
+    assert seen.value == 3

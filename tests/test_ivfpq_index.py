@@ -64,15 +64,25 @@ def test_persisted_search_equals_in_memory_operator(
     assert len(got) == 3 * 4
 
 
-def test_persisted_search_prunes_code_partitions(spark, tmp_path_factory):
-    """The codes scan must carry cell_id as PartitionFilters —
-    directory pruning is the whole point of persisting per-cell."""
+def test_persisted_search_prunes_code_partitions(
+    spark, tmp_path_factory, partitions_read
+):
+    """The codes scan must carry cell_id as PartitionFilters, and at
+    run time read exactly the distinct probed cells — directory
+    pruning is the whole point of persisting per-cell."""
     emb = _emb(spark)
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4)
-    out = lvec.search_ivfpq_index(
-        spark, path, _queries(emb), k=3, n_probe=2
+    frozen = lvec.build_ivfpq_index(emb, path, n_cells=4)
+    # one query in a local frame, as a serving request sends (no
+    # selective predicate of its own): its 2 probed cells are a strict
+    # subset of the 4
+    q = spark.createDataFrame(
+        [tuple(_queries(emb, n=1).first())], "query_id long, query_vec array<float>"
     )
+    out = lvec.search_ivfpq_index(spark, path, q, k=3, n_probe=2)
+    read = partitions_read(out.collect)
+    probed = lvec._cells_of(lvec._PQ.probes(q, frozen, 2, "query_id", "query_vec"))
+    assert read == len(probed) < 4, (read, probed)
     plan = out._jdf.queryExecution().executedPlan().toString()
     heads = [
         seg.split("\n")[0]

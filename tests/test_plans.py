@@ -225,10 +225,14 @@ def test_sketch_rollup_union_consistent_and_accurate(spark, smoke_dir):
         assert abs(got[y] - n) <= max(0.05 * n, 2), (y, got[y], n)
 
 
-def test_ivf_index_search_prunes_cell_partitions(spark, smoke_dir, tmp_path_factory):
+def test_ivf_index_search_prunes_cell_partitions(
+    spark, smoke_dir, tmp_path_factory, partitions_read
+):
     """The persisted IVF index is partitioned by cell_id so a probe
     reads ONLY the probed cells' directories: the scan must carry the
-    cell filter as PartitionFilters (directory pruning), and the
+    cell filter as PartitionFilters (directory pruning), it must read
+    at run time exactly the distinct probed cells (the plan string
+    alone passes even when dynamic pruning reads every cell), and the
     pruned search must return exactly what the in-memory operator
     returns with the same centroids and dials."""
     from pyspark.sql import functions as F
@@ -237,12 +241,14 @@ def test_ivf_index_search_prunes_cell_partitions(spark, smoke_dir, tmp_path_fact
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
 
     emb = load_table(spark, smoke_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
+    # a local query frame, as a serving request sends: it carries no
+    # selective predicate of its own for dynamic pruning to lean on
+    queries = spark.createDataFrame(
+        [tuple(r) for r in emb.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect()],
+        "query_id bigint, query_vec array<float>",
     )
     path = str(tmp_path_factory.mktemp("ivf") / "index")
-    lvec.build_ivf_index(emb, path, n_cells=8)
+    cent = lvec.build_ivf_index(emb, path, n_cells=8)
 
     out = lvec.search_ivf_index(spark, path, queries, k=5, n_probe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -259,10 +265,14 @@ def test_ivf_index_search_prunes_cell_partitions(spark, smoke_dir, tmp_path_fact
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
         for r in lvec.top_k_ann_ivf(emb, queries, k=5, n_probe=2).collect()
     )
-    got = sorted(
-        (r.query_id, r.vec_id, r.cos_sim, r.rk) for r in out.collect()
-    )
+    rows = []
+    read = partitions_read(lambda: rows.extend(out.collect()))
+    got = sorted((r.query_id, r.vec_id, r.cos_sim, r.rk) for r in rows)
     assert got == expect
+    probed = lvec._cells_of(
+        lvec._RAW.probes(queries, (cent,), 2, "query_id", "query_vec")
+    )
+    assert read == len(probed) < 8, (read, probed)
 
 
 def test_ivf_index_delta_append_rewrites_only_touched_cells(

@@ -743,17 +743,11 @@ def cluster_balance_sample(
     from .vectors import (
         _assign_cells_literal,
         _collect_centroids,
-        finite_vec,
-        norm,
+        _corpus,
         seed_centroids,
     )
 
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(vec_id_col),
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
+    corpus = _corpus(embeddings, vec_id_col, vec_col)
     cent_rows = _collect_centroids(
         seed_centroids(embeddings, n_cells, id_col=vec_id_col, vec_col=vec_col)
     )

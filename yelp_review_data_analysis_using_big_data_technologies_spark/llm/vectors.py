@@ -1,10 +1,14 @@
 """Vector similarity search over embedding columns (SURVEY.md §2.12).
 
 Embeddings are ordinary ``array<float>`` columns; similarity is
-computed with codegen'd higher-order functions (``zip_with`` +
-``aggregate``) — no Python UDF in the scoring path, and DuckDB's
+computed with higher-order functions (``zip_with`` + ``aggregate``)
+— no Python UDF in the scoring path, and DuckDB's
 ``list_cosine_similarity`` agrees to 6 decimals so everything here is
-oracle-checkable.
+oracle-checkable.  Each expression is built from SQL text in one
+``F.expr``/``selectExpr`` call (builders take a column name or SQL
+text), and each frozen matrix — centroids, codebooks, LSH planes —
+rides as ONE folded literal (:func:`_json_lit`), so a single-query
+search builds its plan in a constant number of driver round trips.
 
 Ad-hoc operators derive their structure per call:
 :func:`top_k_bruteforce` (exact: broadcast queries × corpus, linear in
@@ -18,9 +22,12 @@ compaction, pruned search, filtered search along the
 :func:`probe_ladder`, and the streaming drain in
 ``streaming.ingest`` — written once over a private cell codec, the one
 decision the two index kinds differ in: how a cell stores its
-vectors.  Both partition the cell relation by ``cell_id`` (a probe is
-directory pruning) and freeze their parameters at build time (merges
-assign and encode against them).  Layout under the index path::
+vectors.  Both partition the cell relation by ``cell_id`` and freeze
+their parameters at build time (merges assign and encode against
+them).  A search reads its query frame once: the broadcast probe frame
+prunes the cell directories at run time (dynamic partition pruning);
+the filtered ladder stages its probe frame and prunes each rung from
+the collected probe rows.  Layout under the index path::
 
                       raw codec                  PQ codec
                       (build_ivf_index)          (build_ivfpq_index)
@@ -42,10 +49,11 @@ from __future__ import annotations
 
 import functools
 import itertools
+import json
 import math
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
@@ -100,8 +108,35 @@ def _round6(x: float) -> float:
     )
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def _json_lit(value, sql_type: str) -> str:
+    """A frozen nested list (centroids, codebooks, planes) as ONE SQL
+    literal: ``from_json`` of its JSON text, which the optimizer folds
+    to a single literal node.  ``json.dumps`` writes the shortest
+    round-trip repr of each double and Spark's JSON reader parses it
+    back to the same bits (pinned, subnormals and ``-0.0`` included, in
+    tests/test_vector_literals.py).  One literal per matrix replaces a
+    tree of one literal per element, whose analysis dominated a
+    single-query search."""
+    return f"from_json('{json.dumps(value)}', '{sql_type}')"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(aggregate(transform({a}, x -> x * x), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
+    )
+
+
+#: exact cosine of a stored vector and a probe query over their
+#: precomputed norms — the raw-cell score of every IVF searcher
+_RAW_COS = f"{_dot_sql('__v', '__q')} / (__n * __qn) AS __cos"
 
 
 def _rank_top_k(
@@ -128,32 +163,34 @@ def _rank_top_k(
     bucket's top-k under the SAME (score desc, id asc) total order,
     so the union of bucket top-ks always contains the global top-k
     and the final window re-ranks identically."""
-    order = (F.desc(score_col), F.asc(id_col))
+    order = f"ORDER BY {score_col} DESC, {id_col} ASC"
     if prune_salt > 1:
-        wl = Window.partitionBy(query_id_col, "__salt").orderBy(*order)
         scored = (
-            scored.withColumn(
-                "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(prune_salt))
+            scored.selectExpr("*", f"pmod(xxhash64({id_col}), {prune_salt}) AS __salt")
+            .selectExpr(
+                "*",
+                f"row_number() OVER (PARTITION BY {query_id_col}, __salt {order}) AS __lr",
             )
-            .withColumn("__lr", F.row_number().over(wl))
-            .filter(F.col("__lr") <= k)
+            .where(f"__lr <= {k}")
             .drop("__salt", "__lr")
         )
-    w = Window.partitionBy(query_id_col).orderBy(*order)
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
+        scored.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {query_id_col} {order}) AS rk"
+        )
+        .where(f"rk <= {k}")
+        .selectExpr(
             query_id_col,
             id_col,
-            F.round(score_col, 6).alias("cos_sim"),
-            F.col("rk").cast("int").alias("rk"),
+            f"round({score_col}, 6) AS cos_sim",
+            "CAST(rk AS INT) AS rk",
         )
     )
 
 
-def finite_vec(c, dim: int | None = None) -> "Column":
-    """Vector rows the geometry accepts — the WELL-SHAPED entry
+def finite_vec(c: str, dim: int | None = None) -> Column:
+    """Vector rows the geometry accepts (``c``: a column name or SQL
+    text) — the WELL-SHAPED entry
     contract, one predicate used by every corpus/query/delta entry
     point (SQL twins use :func:`vec_ok_sql`):
 
@@ -180,14 +217,12 @@ def finite_vec(c, dim: int | None = None) -> "Column":
 
     All arms are no-ops on well-formed corpora, so clean-fixture
     results are unchanged."""
-    col = F.col(c) if isinstance(c, str) else c
-    bad = F.exists(
-        col, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+    dim_arm = f" AND size({c}) = {dim}" if dim is not None else ""
+    return F.expr(
+        f"{c} IS NOT NULL AND NOT exists({c}, x -> x IS NULL OR isnan(x) "
+        f"OR abs(x) = CAST('Infinity' AS DOUBLE)) AND exists({c}, x -> x <> 0)"
+        + dim_arm
     )
-    ok = col.isNotNull() & ~bad & F.exists(col, lambda x: x != 0)
-    if dim is not None:
-        ok = ok & (F.size(col) == dim)
-    return ok
 
 
 def vec_ok_sql(dim: int | None = EMBEDDING_DIM, col: str = "embedding") -> str:
@@ -238,12 +273,9 @@ def _corpus(
     projection every IVF-family operator and index writer starts from
     (``__n``, the precomputed row norm, keeps each centroid score to
     one dot pass)."""
-    vcast = F.col(vec_col).cast("array<double>")
-    return df.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
+    vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    return df.filter(finite_vec(vec_col)).selectExpr(
+        id_col, *meta, f"{vcast} AS __v", f"{_norm_sql(vcast)} AS __n"
     )
 
 
@@ -267,65 +299,42 @@ def _probe_frame(
     sweep already relies on), so a probe-widening ladder derives
     every rung from ONE frame instead of rebuilding the scored-
     centroid projection per rung."""
-    qcast = F.col(query_vec_col).cast("array<double>")
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), qcast.alias("__q"), norm(qcast).alias("__qn")
+    qcast = f"CAST({query_vec_col} AS ARRAY<DOUBLE>)"
+    q = queries.filter(finite_vec(query_vec_col)).selectExpr(
+        query_id_col, f"{qcast} AS __q", f"{_norm_sql(qcast)} AS __qn"
     )
-    probe_cells = F.transform(
-        F.slice(
-            F.sort_array(_cell_scores("__q", "__qn", cent_rows), asc=False),
-            1,
-            n_probe,
-        ),
-        lambda c: (-c["nc"]).cast("int"),
+    probe_cells = (
+        f"transform(slice(sort_array({_cell_scores('__q', '__qn', cent_rows)}, "
+        f"false), 1, {n_probe}), c -> CAST(-c.nc AS INT))"
     )
     if rank_col is None:
-        return q.select(
-            query_id_col,
-            "__q",
-            "__qn",
-            F.explode(probe_cells).alias("cell_id"),
+        return q.selectExpr(
+            query_id_col, "__q", "__qn", f"explode({probe_cells}) AS cell_id"
         )
-    return q.select(
-        query_id_col,
-        "__q",
-        "__qn",
-        F.posexplode(probe_cells).alias(rank_col, "cell_id"),
-    ).withColumn(rank_col, F.col(rank_col) + F.lit(1))
+    return q.selectExpr(
+        query_id_col, "__q", "__qn", f"posexplode({probe_cells}) AS (__p0, cell_id)"
+    ).selectExpr(query_id_col, "__q", "__qn", f"__p0 + 1 AS {rank_col}", "cell_id")
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array columns via ``zip_with`` + ``aggregate``
-    (sequential double accumulation — deterministic order, matching the
-    oracle's list functions)."""
-    return F.aggregate(
-        F.zip_with(_col(a), _col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array columns (names or SQL text) via
+    ``zip_with`` + ``aggregate`` (sequential double accumulation —
+    deterministic order, matching the oracle's list functions)."""
+    return F.expr(_dot_sql(a, b))
 
 
-def norm(a: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(_col(a), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
+def norm(a: str) -> Column:
+    return F.expr(_norm_sql(a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity; inputs are cast to ``array<double>`` first so
     both engines accumulate at the same precision (on raw
     ``array<float>`` embedding columns the per-element products would
     otherwise compute at float precision and drift from the oracle in
     the 6th decimal; the cast is a no-op for already-double callers)."""
-    ac = _col(a).cast("array<double>")
-    bc = _col(b).cast("array<double>")
-    return dot(ac, bc) / (norm(ac) * norm(bc))
-
-
-def lit_vector(values: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
+    ac, bc = f"CAST({a} AS ARRAY<DOUBLE>)", f"CAST({b} AS ARRAY<DOUBLE>)"
+    return F.expr(f"{_dot_sql(ac, bc)} / ({_norm_sql(ac)} * {_norm_sql(bc)})")
 
 
 def top_k_bruteforce(
@@ -347,11 +356,11 @@ def top_k_bruteforce(
     # NULL vectors carry no geometry: excluded on both sides (the SQL
     # twins filter identically; DuckDB's list_cosine_similarity even
     # raises on NULL input rather than propagating)
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    corpus = embeddings.filter(finite_vec(vec_col)).selectExpr(
+        id_col, f"CAST({vec_col} AS ARRAY<DOUBLE>) AS __v"
     )
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("__q")
+    q = queries.filter(finite_vec(query_vec_col)).selectExpr(
+        query_id_col, f"CAST({query_vec_col} AS ARRAY<DOUBLE>) AS __q"
     )
     scored = corpus.crossJoin(F.broadcast(q)).withColumn(
         "__cos", cosine("__v", "__q")
@@ -700,15 +709,16 @@ def mmr_rerank_sql(
     return mmr_greedy_sql(rel_select, k=k, lam=lam, pre_ctes=pre)
 
 
-def sign_bucket(vec: Column | str, planes: list[list[float]] = PLANES) -> Column:
-    """Sign-LSH bucket id: bit i is set iff ``vec · plane_i >= 0``.
-    Nearby vectors agree on most signs → collide in the same bucket
-    with probability 1 - θ/π per plane."""
-    v = _col(vec)
-    out = F.lit(0)
-    for i, p in enumerate(planes):
-        out = out + F.when(dot(v, lit_vector(p)) >= 0, F.lit(2**i)).otherwise(F.lit(0))
-    return out
+def sign_bucket(vec: str, planes: list[list[float]] = PLANES) -> Column:
+    """Sign-LSH bucket id of an array column (name or SQL text): bit i
+    is set iff ``vec · plane_i >= 0``.  Nearby vectors agree on most
+    signs → collide in the same bucket with probability 1 - θ/π per
+    plane.  The planes ride as one matrix literal."""
+    return F.expr(
+        f"aggregate(transform({_json_lit(planes, 'array<array<double>>')}, "
+        f"(p, i) -> IF({_dot_sql(vec, 'p')} >= 0, shiftleft(1, i), 0)), "
+        "0, (acc, b) -> acc + b)"
+    )
 
 
 def sign_bucket_sql(vec_expr: str, planes: list[list[float]] = PLANES) -> str:
@@ -741,11 +751,11 @@ def top_k_ann_signlsh(
     Recall < 1 by design; the bruteforce variant is the exactness
     baseline and the unit tests measure recall against it.
     """
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    corpus = embeddings.filter(finite_vec(vec_col)).selectExpr(
+        id_col, f"CAST({vec_col} AS ARRAY<DOUBLE>) AS __v"
     ).withColumn("__bucket", sign_bucket("__v", planes))
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("__q")
+    q = queries.filter(finite_vec(query_vec_col)).selectExpr(
+        query_id_col, f"CAST({query_vec_col} AS ARRAY<DOUBLE>) AS __q"
     ).withColumn("__bucket", sign_bucket("__q", planes))
     scored = corpus.join(F.broadcast(q), on="__bucket").withColumn(
         "__cos", cosine("__v", "__q")
@@ -829,12 +839,10 @@ def cosine_near_dup_pairs(
     # and the candidate set is ~bands·buckets·pop² pairs, so paying 3
     # HOF passes per pair instead of 1 tripled the verify cost
     # (bitwise-identical result — same norm expression, computed once).
-    vcast = F.col(vec_col).cast("array<double>")
+    vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
     base = stage(
-        embeddings.select(
-            F.col(id_col).alias("__id"),
-            vcast.alias("__v"),
-            norm(vcast).alias("__n"),
+        embeddings.selectExpr(
+            f"{id_col} AS __id", f"{vcast} AS __v", f"{_norm_sql(vcast)} AS __n"
         )
     )
     keys = base.select(
@@ -871,9 +879,7 @@ def cosine_near_dup_pairs(
         )
         .withColumn(
             "cos_sim",
-            F.round(
-                dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6
-            ),
+            F.expr(f"round({_dot_sql('__va', '__vb')} / (__na * __nb), 6)"),
         )
         .filter(F.col("cos_sim") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
@@ -916,17 +922,14 @@ def cosine_dedup_delta(
             corpus.count() + delta_ok.count(), target_bucket_size
         )
     bands = _band_planes(n_bands, n_planes)
-    vcast = F.col(vec_col).cast("array<double>")
+    vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
 
     def _proj(df: DataFrame) -> DataFrame:
-        out = stage(
-            df.select(
-                F.col(id_col).alias("__id"),
-                vcast.alias("__v"),
-                norm(vcast).alias("__n"),
+        return stage(
+            df.selectExpr(
+                f"{id_col} AS __id", f"{vcast} AS __v", f"{_norm_sql(vcast)} AS __n"
             )
         )
-        return out
 
     def _keys(base: DataFrame) -> DataFrame:
         return base.select(
@@ -964,8 +967,7 @@ def cosine_dedup_delta(
             on="__id_c",
         )
         .withColumn(
-            "__cos",
-            F.round(dot("__vd", "__vc") / (F.col("__nd") * F.col("__nc")), 6),
+            "__cos", F.expr(f"round({_dot_sql('__vd', '__vc')} / (__nd * __nc), 6)")
         )
         .filter(F.col("__cos") >= threshold)
         .select(F.col("__id_d").alias(id_col))
@@ -1049,48 +1051,34 @@ def _collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     )
 
 
-def _sql_double(x: float) -> str:
-    # repr() is the shortest decimal that round-trips; Spark's SQL
-    # parser reads it back with Double.parseDouble → the same bits.
-    return repr(float(x)) + "D"
-
-
-def _sql_vector(vec: list[float]) -> str:
-    return "array(" + ", ".join(_sql_double(x) for x in vec) + ")"
-
-
 def _cell_scores(
     vec_name: str,
     norm_name: str,
     cent_rows: list[tuple[int, list[float]]],
-) -> Column:
-    """Per-centroid similarity scores as ``array<struct<s,nc>>``; the
-    negated cell id (``nc``) makes lexicographic struct ordering break
-    similarity ties toward the SMALLEST cell id under both
-    ``array_max`` and descending ``sort_array``.
+) -> str:
+    """SQL text of the per-centroid similarity scores as
+    ``array<struct<s,nc>>``; the negated cell id (``nc``) makes
+    lexicographic struct ordering break similarity ties toward the
+    SMALLEST cell id under both ``array_max`` and descending
+    ``sort_array``.
 
-    The whole array is rendered as ONE SQL string handed to a single
-    ``F.expr`` — building the same tree Column-by-Column paid one Py4J
-    round-trip per centroid *element* (K·dim·~2 ≈ a thousand driver
-    calls) and dominated the query's wall clock at small scale.
-
-    Centroid norms are folded to Python float literals (same left-fold
-    accumulation order and IEEE sqrt as the Spark expressions, so
-    results are bit-identical), and ``norm_name`` carries the
-    precomputed row norm, so each score costs ONE zip_with+aggregate
-    dot pass instead of the six passes a full inline cosine pays."""
-    parts = []
-    for cid, cvec in cent_rows:
-        cnorm = math.sqrt(sum(x * x for x in cvec))
-        dot_s = (
-            f"aggregate(zip_with({vec_name}, {_sql_vector(cvec)}, "
-            "(x, y) -> x * y), cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        parts.append(
-            f"struct({dot_s} / ({norm_name} * {_sql_double(cnorm)}) AS s, "
-            f"{-cid} AS nc)"
-        )
-    return F.expr("array(" + ", ".join(parts) + ")")
+    The centroids, their norms and their negated ids are ONE literal
+    (:func:`_json_lit`) that a single ``transform`` walks — no per-
+    centroid expression tree to build or analyse.  Centroid norms are
+    folded on the driver (an explicit left fold — not ``sum``, which
+    compensates on Python ≥ 3.12 — and IEEE sqrt, as the Spark
+    expressions do, so results are bit-identical), and
+    ``norm_name`` carries the precomputed row norm, so each score
+    costs ONE zip_with+aggregate dot pass."""
+    rows = [
+        {"c": c, "n": math.sqrt(functools.reduce(lambda a, x: a + x * x, c, 0.0)), "nc": -cid}
+        for cid, c in cent_rows
+    ]
+    cents = _json_lit(rows, "array<struct<c:array<double>,n:double,nc:int>>")
+    return (
+        f"transform({cents}, e -> struct({_dot_sql(vec_name, 'e.c')} / "
+        f"({norm_name} * e.n) AS s, e.nc AS nc))"
+    )
 
 
 def assign_cells(
@@ -1108,9 +1096,9 @@ def assign_cells(
     per row.  Zero shuffles, zero joins, zero broadcast exchanges; the
     previous crossJoin + partial-agg arg-max shuffled the full vector
     column once for no benefit."""
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.select(
-        F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
+    vcast = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    corpus = embeddings.selectExpr(
+        id_col, f"{vcast} AS __v", f"{_norm_sql(vcast)} AS __n"
     )
     return _assign_cells_literal(
         corpus, _collect_centroids(centroids), id_col
@@ -1127,9 +1115,9 @@ def _assign_cells_literal(
     projection keeps the per-centroid score to one dot pass).  All
     input columns pass through (the index builder may carry metadata
     columns alongside the vector)."""
-    best = F.array_max(_cell_scores("__v", "__n", cent_rows))
-    return corpus.select(
-        "*", (-best["nc"]).cast("int").alias("cell_id")
+    return corpus.selectExpr(
+        "*",
+        f"CAST(-array_max({_cell_scores('__v', '__n', cent_rows)}).nc AS INT) AS cell_id",
     )
 
 
@@ -1175,9 +1163,7 @@ def top_k_ann_ivf(
     probes = _probe_frame(
         queries, cent_rows, n_probe, query_id_col, query_vec_col
     )
-    scored = assigned.join(F.broadcast(probes), on="cell_id").withColumn(
-        "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-    )
+    scored = _RAW.score(assigned.join(F.broadcast(probes), on="cell_id"))
     # cell-bounded candidates — skip the salted prune (see
     # search_ivf_index; the prune is exact either way, this is perf)
     return _rank_top_k(scored, k, query_id_col, id_col, prune_salt=1)
@@ -1220,11 +1206,9 @@ def top_k_ann_ivf_multidial(
     # staging so the cache holds no vector arrays (guide §2.3), and
     # fill it eagerly — every dial's rank leg references it
     scored = stage(
-        assigned.join(F.broadcast(probes_ranked), on="cell_id")
-        .withColumn(
-            "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-        )
-        .select(query_id_col, id_col, "__cos", "__pr")
+        _RAW.score(
+            assigned.join(F.broadcast(probes_ranked), on="cell_id")
+        ).select(query_id_col, id_col, "__cos", "__pr")
     )
     scored.count()
     return [
@@ -1267,12 +1251,11 @@ def train_centroids_kmeans(
     return spark.createDataFrame(rows, "cell_id int, __c array<double>")
 
 
-def normalize(vec: Column | str) -> Column:
-    """L2-normalize an array column (zero vectors pass through as-is to
-    avoid division by zero)."""
-    v = _col(vec)
-    n = norm(v)
-    return F.when(n == 0, v).otherwise(F.transform(v, lambda x: x / n))
+def normalize(vec: str) -> Column:
+    """L2-normalize an array column (name or SQL text; zero vectors
+    pass through as-is to avoid division by zero)."""
+    n = _norm_sql(vec)
+    return F.expr(f"CASE WHEN {n} = 0 THEN {vec} ELSE transform({vec}, y -> y / {n}) END")
 
 
 def centroid_distances(
@@ -1524,15 +1507,6 @@ def _lloyd(X, k: int, seed: int, max_iter: int):
     return C
 
 
-def _sql_matrix(vecs: list[list[float]]) -> str:
-    """Literal ``array<array<double>>`` rendered as ONE SQL string —
-    element_at(matrix, i+1) then indexes it without a join.  Built as
-    text for the same reason as :func:`_cell_scores`: Column-by-Column
-    construction pays one Py4J round-trip per element (measured: the
-    PQ literals dominated the whole IVF-PQ query's wall clock)."""
-    return "array(" + ", ".join(_sql_vector(v) for v in vecs) + ")"
-
-
 def pq_encode_mse(
     embeddings: DataFrame,
     codebooks: DataFrame,
@@ -1543,7 +1517,7 @@ def pq_encode_mse(
     report reconstruction quality: ``(id, pq_codes array<int>, mse)``.
 
     The ``m×k``-row codebook is collected (bounded — independent of
-    corpus size) and inlined as literals, so encoding is ONE narrow
+    corpus size) and inlined as one literal, so encoding is ONE narrow
     projection over the corpus scan: per subspace an ``array_max``
     over k ``(−dist, −code)`` structs picks the argmin code with
     deterministic smallest-code tie-break — zero joins, zero
@@ -1552,26 +1526,19 @@ def pq_encode_mse(
     the same projection.
     """
     by_sub = _collect_codebooks(codebooks)
-    vcast = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col), vcast.alias("__v"))
-
-    coded = base.select(
-        id_col, "__v", _pq_codes_expr("__v", by_sub).alias("pq_codes")
-    )
+    coded = embeddings.selectExpr(
+        id_col, f"CAST({vec_col} AS ARRAY<DOUBLE>) AS __v"
+    ).select(id_col, "__v", _pq_codes_expr("__v", by_sub).alias("pq_codes"))
     recon = (
-        "concat("
-        + ", ".join(
-            f"element_at({_sql_matrix([c for _code, c in by_sub[j]])}, "
-            f"element_at(pq_codes, {j + 1}) + 1)"
-            for j in sorted(by_sub)
-        )
-        + ")"
+        f"flatten(zip_with({_books_lit(by_sub)[0]}, pq_codes, "
+        "(b, c) -> element_at(b, c + 1)))"
     )
-    mse = F.expr(
+    return coded.selectExpr(
+        id_col,
+        "pq_codes",
         f"round(aggregate(zip_with(__v, {recon}, (v, r) -> (v - r) * (v - r)), "
-        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x) / size(__v), 9)"
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / size(__v), 9) AS mse",
     )
-    return coded.select(id_col, "pq_codes", mse.alias("mse"))
 
 
 def quantize_pq(
@@ -1606,28 +1573,32 @@ def _collect_codebooks(codebooks: DataFrame) -> dict[int, list[tuple[int, list[f
     return by_sub
 
 
+def _books_lit(by_sub: dict[int, list[tuple[int, list[float]]]]) -> tuple[str, int]:
+    """The codebooks as ONE ``array<array<array<double>>>`` literal
+    (subspace, then code order — a code is its index in its subspace's
+    list) and the subspace width."""
+    books = [[c for _code, c in by_sub[j]] for j in sorted(by_sub)]
+    return _json_lit(books, "array<array<array<double>>>"), len(books[0][0])
+
+
 def _pq_codes_expr(
     vec_name: str, by_sub: dict[int, list[tuple[int, list[float]]]]
 ) -> Column:
     """``array<int>`` of per-subspace argmin codes over a named array
     column — the literal-codebook encode projection shared by
     :func:`pq_encode_mse` and :func:`top_k_ann_ivfpq` (zero joins, the
-    codebook is corpus-size-independent).  Rendered as ONE SQL string
-    handed to a single ``F.expr`` — see :func:`_sql_matrix`."""
-    sub = len(next(iter(by_sub.values()))[0][1])
-    parts = []
-    for j in sorted(by_sub):
-        s = f"slice({vec_name}, {j * sub + 1}, {sub})"
-        structs = ", ".join(
-            f"struct(-aggregate(zip_with({s}, {_sql_vector(cent)}, "
-            "(x, y) -> (x - y) * (x - y)), cast(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v) AS nd, {-code} AS nc)"
-            for code, cent in by_sub[j]
-        )
-        parts.append(
-            f"CAST(-(array_max(array({structs})).nc) AS INT)"
-        )
-    return F.expr("array(" + ", ".join(parts) + ")")
+    codebook is corpus-size-independent): per subspace an
+    ``array_max`` over ``(−dist, −code)`` structs, so ties go to the
+    smallest code."""
+    books, sub = _books_lit(by_sub)
+    sq = (
+        f"aggregate(zip_with(slice({vec_name}, j * {sub} + 1, {sub}), c, "
+        "(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    return F.expr(
+        f"transform({books}, (b, j) -> CAST(-(array_max(transform(b, "
+        f"(c, i) -> struct(-{sq} AS nd, -i AS nc))).nc) AS INT))"
+    )
 
 
 def top_k_ann_ivfpq(
@@ -1773,10 +1744,7 @@ def _ivfpq_candidates(
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
     # Residual frame, STAGED: its consumers are the codebook trainer's
     # sample collect plus the encode projection — unstaged, the
-    # K-centroid assign expression re-evaluates per consumer.  All
-    # literal trees here are single F.expr SQL strings (Column-by-Column
-    # construction paid ~10k Py4J round-trips and dominated the query's
-    # wall clock at any scale).
+    # K-centroid assign expression re-evaluates per consumer.
     resid = stage(_residual_frame(assigned, cent_rows, id_col))
     if codebooks is None:
         codebooks = train_pq_codebooks(
@@ -1818,27 +1786,9 @@ def _adc_probes(
     the m×k ADC table ``tab[j][c] = dot(q_slice_j, codebook[j][c])``
     (a pure projection on the tiny query frame).  Shared by the
     in-memory IVF-PQ operator and the persisted-index searcher."""
-    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
-    base_dot = F.expr(
-        f"aggregate(zip_with(__q, element_at({cents_mat}, cell_id + 1), "
-        "(x, y) -> x * y), cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    sub = len(next(iter(by_sub.values()))[0][1])
-    tab = F.expr(
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                f"aggregate(zip_with(slice(__q, {j * sub + 1}, {sub}), "
-                f"{_sql_vector(cent)}, (x, y) -> x * y), "
-                "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-                for _code, cent in by_sub[j]
-            )
-            + ")"
-            for j in sorted(by_sub)
-        )
-        + ")"
-    )
+    cents = _json_lit([c for _cid, c in cent_rows], "array<array<double>>")
+    books, sub = _books_lit(by_sub)
+    tab = _dot_sql(f"slice(__q, j * {sub} + 1, {sub})", "c")
     return _probe_frame(
         queries,
         cent_rows,
@@ -1846,14 +1796,14 @@ def _adc_probes(
         query_id_col,
         query_vec_col,
         rank_col=rank_col,
-    ).select(
+    ).selectExpr(
         query_id_col,
         "__q",
         "__qn",
         "cell_id",
         *([rank_col] if rank_col is not None else []),
-        base_dot.alias("__bd"),
-        tab.alias("__tab"),
+        f"{_dot_sql('__q', f'element_at({cents}, cell_id + 1)')} AS __bd",
+        f"transform({books}, (b, j) -> transform(b, c -> {tab})) AS __tab",
     )
 
 
@@ -1873,22 +1823,21 @@ def _adc_rescored(
     multi-rerank sweep keeps the candidate rank ``__crk``)."""
     # Bracket indexing (GetArrayItem) is 0-based, matching the 0-based
     # lambda index j and code values directly.
-    approx = F.expr(
-        "__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
-        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    ) / (F.col("__n") * F.col("__qn"))
-    cand_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__approx"), F.asc(id_col)
-    )
     candidates = (
-        cand.withColumn("__approx", approx)
-        .withColumn("__crk", F.row_number().over(cand_w))
-        .filter(F.col("__crk") <= cut)
+        cand.selectExpr(
+            "*",
+            "(__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
+            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)) / (__n * __qn) AS __approx",
+        )
+        .selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {query_id_col} "
+            f"ORDER BY __approx DESC, {id_col} ASC) AS __crk",
+        )
+        .where(f"__crk <= {cut}")
         .select(query_id_col, id_col, "__q", "__qn", *extra)
     )
-    return candidates.join(corpus, on=id_col).withColumn(
-        "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-    )
+    return _RAW.score(candidates.join(corpus, on=id_col))
 
 
 def _adc_rank_joined(
@@ -1921,14 +1870,14 @@ def _residual_frame(
     index codec, and the standalone trainer.  ``extra_cols`` rides
     metadata (and, for a merge, the raw vector) through to the
     encoded frame."""
-    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
-    return assigned.withColumn(
-        "__r",
-        F.expr(
-            f"zip_with(__v, element_at({cents_mat}, cell_id + 1), "
-            "(x, y) -> x - y)"
-        ),
-    ).select(id_col, *extra_cols, "cell_id", "__n", "__r")
+    cents = _json_lit([c for _cid, c in cent_rows], "array<array<double>>")
+    return assigned.selectExpr(
+        id_col,
+        *extra_cols,
+        "cell_id",
+        "__n",
+        f"zip_with(__v, element_at({cents}, cell_id + 1), (x, y) -> x - y) AS __r",
+    )
 
 
 def train_ivfpq_params(
@@ -2086,9 +2035,7 @@ class _RawCells:
         )
 
     def score(self, joined):
-        return joined.withColumn(
-            "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-        )
+        return joined.selectExpr("*", _RAW_COS)
 
     def ranker(self, spark, path, k, rerank, id_col, query_id_col):
         # prune_salt=1: per-query candidates are already cell-bounded
@@ -2369,17 +2316,23 @@ def _search_index(
     query_vec_col: str,
     frozen: Sequence,
 ) -> DataFrame:
-    """Pruned top-k search: per-query probe cells are chosen map-side
-    against the frozen centroids, and the distinct probed cells become
-    a LITERAL ``isin`` on the partition column — static partition
-    pruning, only those cell directories are read."""
+    """Pruned top-k search that reads the query frame ONCE: per-query
+    probe cells are chosen map-side against the frozen centroids, the
+    probe frame is broadcast, and Spark's dynamic partition pruning
+    reuses that broadcast to prune the cell scan at run time — only
+    the probed cells' directories are read, with no driver-side
+    collect of the probed cells first.
+
+    DPP is planned only when the broadcast side carries a filter the
+    optimizer deems selective; ``cell_id IN (<the index's cells>)`` is
+    that filter — always true of a probe row, so results are
+    unchanged."""
     frozen = _frozen_params(spark, path, codec, frozen)
-    probes = codec.probes(queries, frozen, n_probe, query_id_col, query_vec_col)
-    # bounded collect: ≤ |Q|·n_probe ints, ≤ n_cells distinct
-    cells = sorted(_cells_of(probes))
-    stored = spark.read.parquet(f"{path}/{codec.rel}").filter(
-        F.col("cell_id").isin(cells)
-    )
+    cell_ids = ", ".join(str(cid) for cid, _c in frozen[0])
+    probes = codec.probes(
+        queries, frozen, n_probe, query_id_col, query_vec_col
+    ).where(f"cell_id IN ({cell_ids})")
+    stored = spark.read.parquet(f"{path}/{codec.rel}")
     rank = codec.ranker(spark, path, k, rerank, id_col, query_id_col)
     return rank(codec.score(stored.join(F.broadcast(probes), on="cell_id")))
 
@@ -2433,13 +2386,19 @@ def _search_index_filtered(
     # ``__pr <= p`` of the descending cell ordering, so the per-rung
     # probe construction and the per-rung probed-cells collect both
     # collapse into one bounded job (|Q|·n_cells rows — dials, not
-    # data).  Queries with non-finite vectors have no probe rows and can
-    # never produce output, so they drop from ``pending`` up front.
-    probes_all = codec.probes(
-        queries, frozen, ladder[-1], query_id_col, query_vec_col, rank_col="__pr"
+    # data).  Staged, so the query frame is read once: the probe-row
+    # collect fills the cache and every rung's broadcast reads it.
+    # Queries with non-finite vectors have no probe rows and can never
+    # produce output, so they drop from ``pending`` up front.
+    probes_all = stage(
+        codec.probes(
+            queries, frozen, ladder[-1], query_id_col, query_vec_col, rank_col="__pr"
+        )
     )
     probe_rows = probes_all.select(query_id_col, "cell_id", "__pr").collect()
     pending = {r[query_id_col] for r in probe_rows}
+    # one read (one schema inference) of the cell relation for all rungs
+    filtered = spark.read.parquet(f"{path}/{codec.rel}").where(where)
     parts: list[DataFrame] = []
     for p in ladder:
         if not pending:
@@ -2454,11 +2413,7 @@ def _search_index_filtered(
                 if r[query_id_col] in pending and r["__pr"] <= p
             }
         )
-        stored = (
-            spark.read.parquet(f"{path}/{codec.rel}")
-            .filter(F.col("cell_id").isin(cells))
-            .filter(F.expr(where))
-        )
+        stored = filtered.where(f"cell_id IN ({', '.join(map(str, cells))})")
         # staged once: feeds BOTH the starvation count and the ranking
         scored = stage(
             codec.score(stored.join(F.broadcast(probes), on="cell_id"))
@@ -2480,13 +2435,8 @@ def _search_index_filtered(
     if not parts:
         # no queries survived the id collect (empty/NULL-id batch):
         # return an empty frame with the ranked-output contract types
-        probes = codec.probes(
-            queries, frozen, ladder[0], query_id_col, query_vec_col
-        )
-        empty = (
-            spark.read.parquet(f"{path}/{codec.rel}")
-            .filter(F.lit(False))
-            .join(F.broadcast(probes), on="cell_id")
+        empty = filtered.where("false").join(
+            F.broadcast(probes_all.drop("__pr")), on="cell_id"
         )
         return rank(codec.score(empty))
     return functools.reduce(DataFrame.unionByName, parts)
@@ -2511,10 +2461,10 @@ def build_ivf_index(
     index.  Partitioning by cell is the load-bearing choice: probing
     becomes DIRECTORY-level partition pruning, so a search touches
     ``n_probe/n_cells`` of the stored bytes no matter how large the
-    corpus grows (verified by plan test: `PartitionFilters` on
-    ``cell_id``, not a post-scan filter).  ``meta_cols`` carries
-    filterable metadata INTO the cell files so a filtered search
-    pushes its predicate down to the pruned scan.
+    corpus grows (pinned in tests/test_plans.py: `PartitionFilters` on
+    ``cell_id`` in the plan, and the run-time partitions-read count).
+    ``meta_cols`` carries filterable metadata INTO the cell files so a
+    filtered search pushes its predicate down to the pruned scan.
 
     Returns the frozen centroid rows just written, for a
     build-then-merge/search caller to thread through."""
@@ -2874,14 +2824,19 @@ def search_ivf_index_filtered(
     selective predicate can starve the probed cells, so the search
     widens deterministically rather than returning < k rows.
 
-    Scale shape: BOTH predicates reach the scan — ``cell_id isin``
-    as PartitionFilters (directory pruning) and ``where`` as a pushed
-    data filter (pinned in tests/test_plans.py) — so rung t reads
-    ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes and only
-    STARVED queries escalate (the per-rung candidate count is a
-    bounded ≤|Q|-row collect off the staged rung relation; |Q| is the
-    probe-batch dial, the codebook class of driver-side state).  The
-    widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
+    Scale shape: the query frame is read once — the widest-rung
+    probe frame is staged, its bounded probe-row collect fills the
+    cache, and every rung derives its probes from it.  BOTH predicates
+    reach the scan — each rung's probed cells as a literal
+    ``cell_id IN`` (PartitionFilters, directory pruning) and ``where``
+    as a pushed data filter (pinned in tests/test_plans.py) — so rung
+    t reads ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes
+    and only STARVED queries escalate (the per-rung candidate count is
+    a bounded ≤|Q|-row collect off the staged rung relation; |Q| is
+    the probe-batch dial, the codebook class of driver-side state).
+    The cell relation is read (its schema inferred) once per search,
+    and the widening loop runs at most ``log2(n_cells/n_probe)+1``
+    rungs.
     """
     return _search_index_filtered(
         _RAW, spark, path, queries, where, k, n_probe, 0, id_col,
